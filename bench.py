@@ -22,7 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from geoengine import datasets, exprs  # noqa: E402
+from geoengine import datasets, exprs, storage  # noqa: E402
 from geoengine.fixtures import images_table  # noqa: E402
 from geoengine.images import with_computed_phash  # noqa: E402
 from geoengine.join import radius_join_pairs  # noqa: E402
@@ -337,8 +337,9 @@ def main() -> None:
 
         def run_scoped(name: str, once_fn) -> None:
             """Warm + reps + min bookkeeping for self-forcing operators
-            that persist via a cache_registry: every rep releases the
-            engine-owned blocks so it measures identical cold work."""
+            that persist intermediates: every rep runs in its own
+            storage.scope(), which releases the engine-owned blocks, so
+            it measures identical cold work."""
             if warm:
                 once_fn()
             times_ = []
@@ -350,10 +351,8 @@ def main() -> None:
             secs_extra[name] = sorted(times_)[0]
 
         def _dbscan_once() -> None:
-            reg = []
-            force(spatial_dbscan(db_pts, 10.0, 8, cache_registry=reg))
-            for h in reg:
-                h.unpersist()
+            with storage.scope():
+                force(spatial_dbscan(db_pts, 10.0, 8))
 
         run_scoped("spatial_dbscan", _dbscan_once)
 
@@ -371,11 +370,8 @@ def main() -> None:
         )
 
         def _emerge_once() -> None:
-            reg = []
-            force(emerging_hotspots(em_pts, _entry.EMERGE_HB,
-                                    cache_registry=reg))
-            for h in reg:
-                h.unpersist()
+            with storage.scope():
+                force(emerging_hotspots(em_pts, _entry.EMERGE_HB))
 
         run_scoped("emerging_hotspots", _emerge_once)
 

@@ -19,7 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from geoengine import datasets, exprs  # noqa: E402
+from geoengine import datasets, exprs, storage  # noqa: E402
 from geoengine.session import get_spark  # noqa: E402
 
 
@@ -135,10 +135,8 @@ def main() -> None:
     db_pts = _entry._dbscan_points(spark, sf_dir)
 
     def _dbscan_once() -> None:
-        reg = []
-        force(spatial_dbscan(db_pts, 10.0, 8, cache_registry=reg))
-        for h in reg:
-            h.unpersist()
+        with storage.scope():
+            force(spatial_dbscan(db_pts, 10.0, 8))
 
     run_scoped("spatial_dbscan", _dbscan_once)
 
@@ -154,10 +152,8 @@ def main() -> None:
     )
 
     def _emerge_once() -> None:
-        reg = []
-        force(emerging_hotspots(em_pts, _entry.EMERGE_HB, cache_registry=reg))
-        for h in reg:
-            h.unpersist()
+        with storage.scope():
+            force(emerging_hotspots(em_pts, _entry.EMERGE_HB))
 
     run_scoped("emerging_hotspots", _emerge_once)
 

@@ -36,6 +36,8 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .storage import cache, checkpoint
+
 # Bounded small-graph fast path (guide §1.2: fix the distributed algorithm
 # first — here, skip it entirely when the graph provably fits one task).
 # The star-contraction loop costs ~2 shuffles + 2 actions PER ROUND and
@@ -91,15 +93,17 @@ def _local_cc_labels(u: "np.ndarray", v: "np.ndarray"):  # noqa: F821
             label = nl
         if np.array_equal(label, before):
             return ids, label
-    return None, None  # pathological; caller falls back to the star loop
+    return None, None  # pathological; the caller raises (no fallback)
 
 
-def _cc_single_task(edges: DataFrame) -> DataFrame:
+def _cc_single_task(edges: DataFrame, schema) -> DataFrame:
     """(node, cluster_id) via one single-task union-find over the whole
     (bounded) edge set — numerically exact, same labels as the star loop
     (cluster_id = component MIN node id). The mapInPandas runs on
     ``coalesce(1)`` so the edge blocks stream into one executor task (no
-    driver collect). Falls back by raising if the vector loop failed."""
+    driver collect). Raises RuntimeError inside the task if the vector
+    loop does not converge — a hard error; there is no star-loop
+    fallback."""
     import pandas as pd
 
     def gen(batches):
@@ -116,59 +120,7 @@ def _cc_single_task(edges: DataFrame) -> DataFrame:
             raise RuntimeError("local CC did not converge")  # pragma: no cover
         yield pd.DataFrame({"node": ids, "cluster_id": ids[label]})
 
-    return edges.coalesce(1).mapInPandas(gen, schema="node long, cluster_id long")
-
-
-def _persistent_rdd_ids(spark) -> set:
-    """Ids of currently-persisted RDDs (includes localCheckpoint blocks,
-    which Dataset.unpersist() does NOT release — verified: after
-    df.localCheckpoint(); df.unpersist(True) the block stays in
-    getRDDStorageInfo until GC + ContextCleaner reach the dereferenced
-    LogicalRDD). This and :class:`_CheckpointHandle` are the engine's
-    second documented private-API seam (next to knn._plan_stats): py4j
-    into SparkContext.getPersistentRDDs. Any failure degrades to 'blocks
-    release on GC', never an error."""
-    try:
-        ids, it = set(), spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-        while it.hasNext():
-            ids.add(it.next()._1())
-        return ids
-    except Exception:  # pragma: no cover - py4j surface differences
-        return set()
-
-
-class _CheckpointHandle:
-    """Releasable reference to localCheckpoint storage blocks. Quacks like
-    a cached DataFrame for the cache_registry contract (``.unpersist()``),
-    but releases at the RDD level — the only mechanism that actually frees
-    checkpoint blocks before GC."""
-
-    def __init__(self, spark, rdd_ids: set):
-        self._spark = spark
-        self._ids = set(rdd_ids)
-
-    def unpersist(self, blocking: bool = False) -> None:
-        try:
-            jmap = self._spark.sparkContext._jsc.sc().getPersistentRDDs()
-            it = jmap.iterator()
-            while it.hasNext():
-                kv = it.next()
-                if kv._1() in self._ids:
-                    kv._2().unpersist(bool(blocking))
-        except Exception:  # pragma: no cover - degrade to GC-time release
-            pass
-        self._ids.clear()
-
-
-def _tracked_checkpoint(df: DataFrame) -> tuple[DataFrame, _CheckpointHandle]:
-    """Eager localCheckpoint + a handle to ITS new storage blocks (the
-    persistent-id delta around the call; the window is tight and the
-    engine's loop is single-threaded — a concurrent cache created in the
-    same instant would be swept, documented limitation of the seam)."""
-    spark = df.sparkSession
-    before = _persistent_rdd_ids(spark)
-    out = df.localCheckpoint()
-    return out, _CheckpointHandle(spark, _persistent_rdd_ids(spark) - before)
+    return edges.coalesce(1).mapInPandas(gen, schema=schema)
 
 
 def _canon_edges(edges: DataFrame) -> DataFrame:
@@ -234,7 +186,6 @@ def connected_components(
     id1: str = "doc1",
     id2: str = "doc2",
     max_iter: int = 30,
-    cache_registry: list[DataFrame] | None = None,
 ) -> DataFrame:
     """(node, cluster_id) for every node appearing in ``pairs``, where
     cluster_id is the MINIMUM node id of the node's connected component —
@@ -247,28 +198,28 @@ def connected_components(
     a graph that somehow fails to converge within ``max_iter`` rounds
     raises loudly rather than returning partial components.
 
-    The returned DataFrame reads the final round's localCheckpoint blocks.
-    Superseded rounds' blocks are released eagerly at the RDD level
-    (plain ``Dataset.unpersist`` does NOT free checkpoint blocks — see
-    ``_persistent_rdd_ids``). Pass ``cache_registry`` (a list; same
-    ``.unpersist()`` calling convention as knn_join_rings) to collect a
-    releasable handle to the FINAL round's blocks once results are
-    materialized — without it, that one small edge-set block lives until
-    GC + ContextCleaner collect it.
+    Both branches (the bounded single-task fast path and the star loop)
+    emit the same schema: node and cluster_id in the edge id type.
+
+    The returned DataFrame reads the final round's localCheckpoint blocks
+    (:func:`storage.checkpoint`). Superseded rounds' blocks are released
+    eagerly; the final round's are released by the enclosing
+    :func:`storage.scope` — without one, that one small edge-set block
+    lives until GC + ContextCleaner collect it.
     """
-    edges, handle = _tracked_checkpoint(
+    edges, release = checkpoint(
         _canon_edges(pairs.select(F.col(id1).alias("u"), F.col(id2).alias("v")))
     )
+    # every branch emits (node, cluster_id) in the edge id type
+    schema = edges.select(
+        F.col("u").alias("node"), F.col("v").alias("cluster_id")
+    ).schema
     sig = _edge_signature(edges)
     if sig[0] == 0:
         # explicit empty frame: deriving from the released checkpoint
         # would only work by CollectLimit short-circuit
-        spark = pairs.sparkSession
-        schema = edges.select(
-            F.col("u").alias("node"), F.col("v").alias("cluster_id")
-        ).schema
-        handle.unpersist()
-        return spark.createDataFrame([], schema)
+        release()
+        return pairs.sparkSession.createDataFrame([], schema)
     if sig[0] <= CC_LOCAL_EDGES and all(
         f.dataType.typeName() in ("long", "integer", "short", "byte")
         for f in edges.schema.fields
@@ -277,19 +228,17 @@ def connected_components(
         # job instead of ~(2 shuffles + 2 actions) x rounds. The label
         # frame is eagerly checkpointed so both downstream consumers read
         # blocks instead of re-running the union-find.
-        labels, lhandle = _tracked_checkpoint(_cc_single_task(edges))
-        handle.unpersist()  # edge blocks superseded by the label blocks
-        if cache_registry is not None:
-            cache_registry.append(lhandle)
+        labels, _ = checkpoint(_cc_single_task(edges, schema))
+        release()  # edge blocks superseded by the label blocks
         return labels
     for _ in range(max_iter):
         # large-star output flows RAW into small-star (one canon per round)
-        edges2, handle2 = _tracked_checkpoint(
+        edges2, release2 = checkpoint(
             _canon_edges(_small_star(_large_star(edges)))
         )
         sig2 = _edge_signature(edges2)
-        handle.unpersist()  # superseded round's blocks, RDD-level release
-        edges, handle = edges2, handle2
+        release()  # superseded round's blocks, RDD-level release
+        edges, release = edges2, release2
         converged, sig = sig2 == sig, sig2
         if converged:
             break
@@ -298,8 +247,6 @@ def connected_components(
             f"connected_components did not converge in {max_iter} "
             "large-star/small-star rounds (pathological graph?)"
         )
-    if cache_registry is not None:
-        cache_registry.append(handle)
     # fixpoint edge set = one star per multi-node component, canonical
     # (u=min, v=member); hubs label themselves
     members = edges.select(
@@ -319,7 +266,6 @@ def dedup_clusters(
     id2: str = "doc2",
     keeper_order: list[Column] | None = None,
     max_iter: int = 30,
-    cache_registry: list[DataFrame] | None = None,
 ) -> DataFrame:
     """The keep/drop decision: every doc row labeled with its near-dup
     cluster and whether it is the cluster's canonical keeper.
@@ -344,8 +290,7 @@ def dedup_clusters(
                 f"dedup_clusters adds a {reserved!r} column but docs "
                 "already has one — rename or drop it first"
             )
-    cc = connected_components(pairs, id1=id1, id2=id2, max_iter=max_iter,
-                              cache_registry=cache_registry)
+    cc = connected_components(pairs, id1=id1, id2=id2, max_iter=max_iter)
     # underscore-aliased join columns so a docs column named 'node' (or any
     # cc-side name) can never be silently dropped or captured
     cc = cc.select(F.col("node").alias("_cc_node"),
@@ -378,7 +323,6 @@ def dedup_documents(
     group_col: str | None = None,
     keeper_order: list[Column] | None = None,
     max_iter: int = 30,
-    cache_registry: list[DataFrame] | None = None,
     **lsh_kw,
 ) -> DataFrame:
     """One-call corpus dedup — the full pipeline a training run needs:
@@ -394,10 +338,8 @@ def dedup_documents(
         docs, id_col=id_col, text_col=text_col, threshold=threshold,
         group_col=group_col, prefilter=prefilter, **lsh_kw,
     )
-    return dedup_clusters(
-        docs, pairs, id_col=id_col, keeper_order=keeper_order,
-        max_iter=max_iter, cache_registry=cache_registry,
-    )
+    return dedup_clusters(docs, pairs, id_col=id_col,
+                          keeper_order=keeper_order, max_iter=max_iter)
 
 
 # mean core degree above which grid contraction shrinks the component
@@ -440,7 +382,6 @@ def spatial_dbscan(
     strategy: str = "auto",
     contract: bool | str = "auto",
     max_iter: int = 30,
-    cache_registry: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Density-based spatial clustering (DBSCAN, Ester et al. KDD'96) as a
     composition of two certified engine primitives: the cell-keyed radius
@@ -474,9 +415,9 @@ def spatial_dbscan(
     Scale posture (100 TB): the eps graph comes from the single int64
     cell equi-join (no cartesian anywhere — plan-asserted in tests); the
     pair set is persisted once and read by the degree count, the
-    core-core edge filter and the border assignment (pass
-    ``cache_registry`` to release it, plus the component fixpoint blocks,
-    once results are materialized); core-set semi-joins and both groupBys
+    core-core edge filter and the border assignment (a
+    :func:`storage.scope` around the materialization releases it, plus
+    the component fixpoint blocks); core-set semi-joins and both groupBys
     shuffle on a single int64 id. eps is a LOCAL density scale — the pair
     set is ~n * avg_neighbors rows, so size eps to the density you mean
     to detect, not to a search radius.
@@ -516,6 +457,7 @@ def spatial_dbscan(
         with_grid_cell,
     )
     from .geodesy import to_km
+    from .knn import _session_broadcast_bytes
 
     if min_pts < 1:
         raise ValueError(f"min_pts must be >= 1, got {min_pts}")
@@ -537,15 +479,13 @@ def spatial_dbscan(
         # contraction candidate: carry each point's supercell through the
         # join (pure Column — no extra pass, just 2 longs on the pair rows)
         pts = with_grid_cell(pts, hb_c, out="scell")
-    pairs = radius_join_pairs(
+    pairs = cache(radius_join_pairs(
         pts, pts, eps, unit=unit, half_bits=half_bits, strategy=strategy,
         validate=False,
     ).select(
         "origin_id", "neighbor_id",
         *(["origin_scell", "neighbor_scell"] if hb_c is not None else []),
-    ).persist()
-    if cache_registry is not None:
-        cache_registry.append(pairs)
+    ))
 
     deg_keys = ["origin_id"] + (["origin_scell"] if hb_c is not None else [])
     deg = pairs.groupBy(*deg_keys).agg(F.count("*").alias("n_eps"))
@@ -579,8 +519,11 @@ def spatial_dbscan(
     # broadcast replaces a shuffle of the large side). Hint-only: results
     # identical; with no probe (contract=False/None grid) or a large core
     # set the shuffle plan is unchanged — at 100 TB the gate never fires.
+    # A session that disabled broadcasts (autoBroadcastJoinThreshold -1/0)
+    # never gets one forced, the same rule as the knn gates.
     bcast_core = (
         core_count is not None and core_count <= _CORE_BROADCAST_ROWS
+        and _session_broadcast_bytes(points) > 0
     )
     core_b = F.broadcast(core) if bcast_core else core
 
@@ -599,8 +542,7 @@ def spatial_dbscan(
             F.col("origin_scell") != F.col("neighbor_scell")
         ).select("origin_scell", "neighbor_scell")
         comp_s = connected_components(
-            super_edges, id1="origin_scell", id2="neighbor_scell",
-            max_iter=max_iter, cache_registry=cache_registry,
+            super_edges, id1="origin_scell", id2="neighbor_scell", max_iter=max_iter
         ).select(F.col("node").alias("_sc"), F.col("cluster_id").alias("_scomp"))
         core_sc = (
             core_rows.select(F.col("origin_id").alias("cid"),
@@ -622,8 +564,7 @@ def spatial_dbscan(
         )
     else:
         comp = connected_components(
-            core_edges, id1="origin_id", id2="neighbor_id",
-            max_iter=max_iter, cache_registry=cache_registry,
+            core_edges, id1="origin_id", id2="neighbor_id", max_iter=max_iter
         )
         core_lab = (
             core.join(comp, core["cid"] == comp["node"], "left")

@@ -304,7 +304,6 @@ def dedup_images(
     phash_col: str | None = None,
     keeper_order: list | None = None,
     max_iter: int = 30,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """One-call IMAGE corpus dedup — the multimodal twin of
     clusters.dedup_documents: perceptual-hash near-dup pairs
@@ -320,7 +319,5 @@ def dedup_images(
         imgs, id_col=id_col, max_hamming=max_hamming,
         block_bits=block_bits, phash_col=phash_col,
     )
-    return dedup_clusters(
-        imgs, pairs, id_col=id_col, keeper_order=keeper_order,
-        max_iter=max_iter, cache_registry=cache_registry,
-    )
+    return dedup_clusters(imgs, pairs, id_col=id_col,
+                          keeper_order=keeper_order, max_iter=max_iter)

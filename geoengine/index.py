@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from . import exprs
 from .geodesy import to_km
 from .join import explode_covering_cells, validate_points, with_grid_cell
+from .storage import cache
 
 MAX_SALT = 256
 
@@ -782,7 +783,6 @@ def emerging_hotspots(
     lat: str = "latitude",
     lon: str = "longitude",
     crit: float = 1.96,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Emerging hot-spot analysis (the space-time-cube classic): Gi*
     per (time-slice, cell) via :func:`gi_star_slices`, then a
@@ -811,19 +811,15 @@ def emerging_hotspots(
     pairs per cell with T = number of time slices (tens), never
     points^2 — + two hash aggregates on the cell key. The gi_z slice
     frame feeds THREE consumers (both self-join sides + the per-cell
-    rollup): pass ``cache_registry`` (a list; same scoped-cache seam as
-    clusters.spatial_dbscan) to persist it once instead of recomputing
-    the point histogram per consumer — the caller unpersists each
-    appended handle after materializing the result.
+    rollup), so it is cached once instead of recomputing the point
+    histogram per consumer; an enclosing :func:`storage.scope` releases
+    it after the result is materialized.
     """
-    gz = (
+    gz = cache(
         gi_star_slices(points, half_bits, bin_col, ring, lat, lon)
         .where(F.col("gi_z").isNotNull())
         .select(bin_col, "ix", "iy", "gi_z")
     )
-    if cache_registry is not None:
-        gz = gz.persist()
-        cache_registry.append(gz)
     a, b = gz.alias("a"), gz.alias("b")
     sgn = (
         F.when(F.col("b.gi_z") > F.col("a.gi_z"), F.lit(1))

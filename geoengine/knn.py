@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from . import exprs
 from .geodesy import EARTH_RADIUS_KM
 from .join import validate_points, with_grid_cell
+from .storage import cache
 
 KM_PER_DEG = math.pi * EARTH_RADIUS_KM / 180.0
 
@@ -124,7 +125,6 @@ def knn_join_rings(
     half_bits: int | None = None,
     max_rounds: int = 3,
     neighbor_count: int | None = None,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Exact kNN by iterative ring probing (see module docstring).
 
@@ -148,11 +148,9 @@ def knn_join_rings(
     RETURNED lazy plan (the union only materializes when the caller acts),
     so they cannot be unpersisted here without forcing eager per-round
     materialization. They are MEMORY_AND_DISK-default, LRU-evictable
-    blocks. Pass ``cache_registry`` (a list) to receive every DataFrame
-    this call caches and unpersist them once the result is materialized —
-    or use ``knn_join_rings_scoped`` which does that automatically;
-    otherwise long-lived sessions issuing many unrelated kNN jobs should
-    spark.catalog.clearCache() between them if storage pressure matters.
+    blocks, released when the enclosing :func:`storage.scope` exits —
+    materialize the result inside it. Without a scope they stay until
+    eviction or spark.catalog.clearCache().
     """
     if not isinstance(k, int):
         # the per-round certification arithmetic (k-th distance vs ring
@@ -163,12 +161,6 @@ def knn_join_rings(
             "knn_join_rings requires an int k; use knn_join_brute for a "
             "per-row k column"
         )
-
-    def _cached(df: DataFrame) -> DataFrame:
-        df = df.cache()
-        if cache_registry is not None:
-            cache_registry.append(df)
-        return df
 
     from .join import spread_small_input
 
@@ -192,10 +184,10 @@ def knn_join_rings(
     n = 1 << hb
     lat_cell_km = (180.0 / n) * KM_PER_DEG
 
-    nb = _cached(with_grid_cell(
+    nb = cache(with_grid_cell(
         nb, hb, lat="neighbor_latitude", lon="neighbor_longitude", out="n_gkey"
     ))
-    pending = _cached(o_all.withColumn(
+    pending = cache(o_all.withColumn(
         "_oix", exprs.grid_ix(F.col("origin_longitude"), hb)
     ).withColumn("_oiy", exprs.grid_iy(F.col("origin_latitude"), hb)))
 
@@ -250,7 +242,7 @@ def knn_join_rings(
         )
         new_pairs = _pairs_dist(probe, nb, "inner", on="n_gkey").drop("n_gkey")
         all_cand = new_pairs if acc is None else acc.unionByName(new_pairs)
-        ranked = _cached(_ranked(all_cand, k))  # read 3x: kth, done, carry
+        ranked = cache(_ranked(all_cand, k))  # read 3x: kth, done, carry
         # Guaranteed-covered radius of ring r at this origin's latitude —
         # RIGOROUS separation bound for any neighbor outside Chebyshev
         # ring r. Case split on the index gap:
@@ -288,7 +280,7 @@ def knn_join_rings(
             .agg(F.max("distance_km").alias("_dk"), F.count("*").alias("_cnt"))
         )
         cand = ranked.join(kth, "origin_id")
-        done = _cached(  # read twice (anti-join + union)
+        done = cache(  # read twice (anti-join + union)
             cand.where(
                 (F.col("_cnt") >= k)
                 & (F.col("_dk") <= guar)
@@ -298,7 +290,7 @@ def knn_join_rings(
         )
         results.append(done)
         done_ids = done.select("origin_id").distinct()
-        pending = _cached(pending.join(done_ids, "origin_id", "left_anti"))
+        pending = cache(pending.join(done_ids, "origin_id", "left_anti"))
         # exact straggler count for the next round's budget gate; the
         # count fully materializes the pending cache, work the next
         # round (or the final action) needs anyway
@@ -320,26 +312,6 @@ def knn_join_rings(
     for x in results[1:]:
         out = out.unionByName(x)
     return out
-
-
-from contextlib import contextmanager
-
-
-@contextmanager
-def knn_join_rings_scoped(
-    origins: DataFrame, neighbors: DataFrame, k: int, **kw
-):
-    """Context-managed kNN rings join: yields the result DataFrame and
-    unpersists every engine-owned per-round cache block on exit —
-    materialize (collect/write) INSIDE the block. Long-lived sessions get
-    zero leaked storage without a global spark.catalog.clearCache()."""
-    caches: list[DataFrame] = []
-    try:
-        yield knn_join_rings(origins, neighbors, k, cache_registry=caches,
-                             **kw)
-    finally:
-        for df in caches:
-            df.unpersist()
 
 
 # stat-less leaves report spark.sql.defaultSizeInBytes (Long.MaxValue by

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from .storage import cache
+
 
 def _dot(a: str, b: str) -> F.Column:
     return F.expr(
@@ -510,9 +512,9 @@ def cosine_near_dup_exact(
     # CACHED: the self-join's two branches (and the dense guard's two
     # aggregates) would otherwise EACH recompute the index's posexplode +
     # cumulative-mass window. Same storage trade as the LSH builders'
-    # signature caches: one narrow (doc, d) block per call, LRU-evictable,
-    # released by spark.catalog.clearCache() in long-lived sessions.
-    buckets = buckets.cache()
+    # signature caches: one narrow (doc, d) block per call, released by an
+    # enclosing storage.scope().
+    buckets = cache(buckets)
     if dense_guard:
         import warnings
 
@@ -585,10 +587,10 @@ def cosine_near_dup_pairs(
     # hyperplane UDF (same pattern as the text LSH builders; one narrow
     # cached block per call). The per-row norm rides along so the exact
     # verify pays one dot fold per pair instead of three (bit-identical).
-    base = spread_small_input(
+    base = cache(spread_small_input(
         vectors.select(F.col(id_col).alias("doc"), F.col(vec_col).alias("v")),
         F.col("doc"),
-    ).withColumn("bucket0", sig(F.col("v"))).withColumn("_n", _norm("v")).cache()
+    ).withColumn("bucket0", sig(F.col("v"))).withColumn("_n", _norm("v")))
     masks = [0]
     if probe_bits >= 1:
         masks += [1 << i for i in range(n_planes)]
@@ -673,7 +675,6 @@ def dedup_embeddings(
     vec_col: str = "embedding",
     keeper_order: list | None = None,
     max_iter: int = 30,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """One-call EMBEDDING corpus dedup — the semantic arm of the dedup
     suite, twin of clusters.dedup_documents / images.dedup_images:
@@ -691,5 +692,4 @@ def dedup_embeddings(
     return dedup_clusters(
         vectors, pairs, id_col=id_col, id1="doc1", id2="doc2",
         keeper_order=keeper_order, max_iter=max_iter,
-        cache_registry=cache_registry,
     )

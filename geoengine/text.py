@@ -19,6 +19,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from .storage import cache
+
 MERSENNE = (1 << 61) - 1
 
 
@@ -440,7 +442,7 @@ def minhash_near_dup_pairs(
 
     rows = num_hashes // bands
     sig = make_minhash_udf(num_hashes, shingle_k)
-    with_sig = (
+    with_sig = cache(  # self-joined below: compute the signature UDF once
         # spread a narrow scan first: the shingling/MinHash Arrow kernel
         # otherwise runs single-task on a one-row-group file (guide §2.2)
         spread_small_input(
@@ -449,7 +451,6 @@ def minhash_near_dup_pairs(
         )
         .withColumn("sig", sig(F.col(text_col)))
         .drop(text_col)
-        .cache()  # self-joined below: compute the signature UDF once
     )
 
     banded = with_sig.select(
@@ -495,7 +496,6 @@ def hash_near_dup_pairs(
     id_col: str = "doc_id",
     max_hamming: int = 6,
     block_bits: int = 16,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Generic 64-bit-hash near-dup via block pigeonhole — works on ANY
     int64 signature column (simhash of text, phash of images, ...). Split
@@ -512,18 +512,14 @@ def hash_near_dup_pairs(
     signature stage — a pandas-UDF simhash or a decode+DCT phash — since a
     broadcast build side is not exchange-reused. Same protection (and
     cache-block trade) as minhash_near_dup_pairs' signature cache; the
-    cached slice is two compact columns. Pass ``cache_registry`` (a list;
-    same contract as knn_join_rings) to collect the cached slice for
-    unpersisting once the pairs are materialized — in a long-lived session
-    without it, one small block per call stays in storage memory."""
+    cached slice is two compact columns, released by an enclosing
+    :func:`storage.scope` once the pairs are materialized."""
     from .join import spread_small_input
 
-    d = spread_small_input(
+    d = cache(spread_small_input(
         df.select(F.col(id_col).alias("doc"), F.col(hash_col).alias("_h64")),
         F.col("doc"),
-    ).cache()
-    if cache_registry is not None:
-        cache_registry.append(d)
+    ))
     blocked = d.select(
         "doc",
         "_h64",
@@ -665,14 +661,13 @@ def _minhash_band_candidates(
     # run it single-task — and that one task would also own the whole
     # band-collision join fanout); cache so the self-join's two branches
     # compute the signature stage once, mirroring minhash_near_dup_pairs
-    with_sig = (
+    with_sig = cache(
         spread_small_input(
             docs.select(F.col(id_col).alias("doc"), F.col(text_col)),
             F.col("doc"),
         )
         .withColumn("sig", sig_col)
         .drop(text_col)
-        .cache()
     )
     banded = with_sig.select(
         "doc",
@@ -709,10 +704,10 @@ def _simhash_block_candidates(
     else:
         sim_col = make_simhash_udf(shingle_k)(F.col(text_col))
     # same spread+cache rationale as _minhash_band_candidates
-    d = spread_small_input(
+    d = cache(spread_small_input(
         docs.select(F.col(id_col).alias("doc"), F.col(text_col)),
         F.col("doc"),
-    ).withColumn("simhash", sim_col).drop(text_col).cache()
+    ).withColumn("simhash", sim_col).drop(text_col))
     blocked = d.select(
         "doc",
         block_split_expr(block_bits).alias("bb"),

@@ -79,12 +79,17 @@ def test_empty_pairs(spark):
     assert connected_components(pairs).count() == 0
 
 
-@pytest.mark.parametrize("seed", [11, 41])
-def test_local_fast_path_equals_star_loop(spark, seed, monkeypatch):
+@pytest.mark.parametrize("seed,id_type", [
+    pytest.param(11, "long", id="11"),
+    pytest.param(41, "long", id="41"),
+    pytest.param(11, "int", id="11-int"),
+])
+def test_local_fast_path_equals_star_loop(spark, seed, id_type, monkeypatch):
     """Round-6 optimization guard: the bounded single-task min-label fast
     path (CC_LOCAL_EDGES) and the distributed star loop must produce
-    IDENTICAL (node, cluster_id) sets on the same graph — chain + blobs +
-    random noise edges cover deep, wide and disconnected components."""
+    IDENTICAL (node, cluster_id) sets AND the same schema on the same
+    graph — chain + blobs + random noise edges cover deep, wide and
+    disconnected components; int ids check the id type is kept."""
     import geoengine.clusters as C
 
     rng = random.Random(seed)
@@ -92,10 +97,19 @@ def test_local_fast_path_equals_star_loop(spark, seed, monkeypatch):
     edges += [(100, 100 + j) for j in range(1, 20)]  # star hub
     edges += [(rng.randrange(300), rng.randrange(300)) for _ in range(120)]
     edges = [(a, b) for a, b in edges if a != b]
-    fast = _cc_spark(spark, edges)  # default threshold: fast path fires
+    pairs = spark.createDataFrame(edges, f"doc1 {id_type}, doc2 {id_type}")
+
+    def run():
+        out = connected_components(pairs)
+        return out.schema, {(r["node"], r["cluster_id"]) for r in out.collect()}
+
+    fast = run()  # default threshold: fast path fires
     monkeypatch.setattr(C, "CC_LOCAL_EDGES", 0)  # force the star loop
-    slow = _cc_spark(spark, edges)
-    assert fast == slow
+    slow = run()
+    assert fast[0] == slow[0]
+    assert [f.dataType.typeName() for f in fast[0]] == [
+        "long" if id_type == "long" else "integer"] * 2
+    assert fast[1] == slow[1]
 
 
 def test_local_cc_labels_kernel():
@@ -158,30 +172,6 @@ def test_exactly_one_keeper_per_cluster(spark):
     )
     assert all(r["k"] == 1 for r in per_cluster)
     assert out.count() == 100
-
-
-def _n_persistent(spark):
-    return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
-
-
-def test_no_cartesian_and_cache_released(spark):
-    edges = [(i, i + 1) for i in range(20)]
-    pairs = spark.createDataFrame(edges, "doc1 long, doc2 long")
-    before = _n_persistent(spark)
-    reg = []
-    out = connected_components(pairs, cache_registry=reg)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    out.collect()
-    assert len(reg) == 1
-    # intermediate rounds already released: at most the final round's
-    # checkpoint block remains beyond the pre-call baseline
-    assert _n_persistent(spark) <= before + 1
-    for h in reg:
-        h.unpersist()
-    # the handle ACTUALLY frees storage (plain Dataset.unpersist cannot
-    # release localCheckpoint blocks — the handle works at the RDD level)
-    assert _n_persistent(spark) <= before
 
 
 def test_dedup_clusters_docs_node_column_preserved(spark):
@@ -344,25 +334,6 @@ def test_dbscan_all_noise_and_validation(spark):
         _dbscan_spark(spark, pts, 10.0, 0)
 
 
-def test_dbscan_plan_no_cartesian_and_cache_released(spark):
-    from geoengine.clusters import spatial_dbscan
-
-    pts = [(i, float(i) * 0.01, float(i) * 0.01) for i in range(40)]
-    df = spark.createDataFrame(
-        pts, "id long, latitude double, longitude double"
-    )
-    before = _n_persistent(spark)
-    reg = []
-    out = spatial_dbscan(df, 5.0, 3, cache_registry=reg)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    out.collect()
-    assert len(reg) >= 1
-    for h in reg:
-        h.unpersist()
-    assert _n_persistent(spark) <= before
-
-
 def test_dbscan_contract_invariance_blobs(spark):
     """Grid contraction is EXACT: forced-on vs forced-off must emit
     identical (is_core, cluster_id) for every point — blobs fixture has
@@ -391,6 +362,40 @@ def test_dbscan_contract_invariance_blobs(spark):
     )
     n_cells = with_grid_cell(df, hb_c, out="sc").select("sc").distinct().count()
     assert n_cells > 3  # more cells than clusters -> contraction non-trivial
+
+
+def test_dbscan_respects_disabled_broadcasts(spark):
+    """autoBroadcastJoinThreshold=-1 forbids broadcasts: the core-set
+    broadcast gate must not force one, and the rows must equal the
+    default conf's (where the gate fires)."""
+    from geoengine import storage
+    from geoengine.clusters import spatial_dbscan
+
+    rng = random.Random(5)
+    pts = [(i, 10.0 + rng.uniform(-0.7, 0.7), 10.0 + rng.uniform(-0.7, 0.7))
+           for i in range(60)]
+    pts += [(60 + i, rng.uniform(-80, 80), rng.uniform(-170, 170))
+            for i in range(20)]
+    df = spark.createDataFrame(pts, "id long, latitude double, longitude double")
+
+    def run():
+        # scoped: the next run must not reuse this run's cached pair set
+        with storage.scope():
+            out = spatial_dbscan(df, 60.0, 5)  # contract='auto' probes cores
+            rows = sorted(map(tuple, out.collect()))
+            return rows, out._jdf.queryExecution().executedPlan().toString()
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    default_rows, default_plan = run()
+    spark.conf.set(key, "-1")
+    try:
+        rows, plan = run()
+    finally:
+        spark.conf.set(key, old)
+    assert "BroadcastExchange" in default_plan
+    assert "BroadcastExchange" not in plan
+    assert rows == default_rows
 
 
 @pytest.mark.parametrize("seed", [3])

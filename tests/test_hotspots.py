@@ -355,25 +355,6 @@ class TestEmergingHotspots:
             assert r["n_bins"] == 2 and r["s"] == 0, r
             assert r["z_mk"] == 0.0 and r["trend"] == "flat", r
 
-    def test_cache_registry_identical_and_released(self, spark):
-        from geoengine.clusters import _persistent_rdd_ids
-        from geoengine.index import emerging_hotspots
-
-        rows = ([(60.0, 100.0, 0)] * 3
-                + [(0.0, 10.0, 0)] + [(0.0, 30.0, 0)] * 2
-                + [(60.0, 100.0, 1)] * 3
-                + [(0.0, 10.0, 1)] * 2 + [(0.0, 30.0, 1)])
-        df = _pts_binned(spark, rows)
-        plain = sorted(map(tuple, emerging_hotspots(df, 4).collect()))
-        before = _persistent_rdd_ids(spark)
-        reg: list = []
-        cached = sorted(map(tuple, emerging_hotspots(
-            df, 4, cache_registry=reg).collect()))
-        assert cached == plain and len(reg) == 1
-        for h in reg:
-            h.unpersist(blocking=True)
-        assert _persistent_rdd_ids(spark) <= before  # no leaked blocks
-
     def test_single_defined_slice_is_null(self, spark):
         from geoengine.index import emerging_hotspots
 

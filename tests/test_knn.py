@@ -3,7 +3,7 @@
 import numpy as np
 import pandas as pd
 
-from geoengine.knn import knn_join_brute, knn_join_rings, knn_join_rings_scoped
+from geoengine.knn import knn_join_brute, knn_join_rings
 
 
 def _points(seed, n):
@@ -57,28 +57,6 @@ def test_rings_early_fallback_gate_invariance(spark, monkeypatch):
     early = keys(knn_join_rings(o, nb, k))
     assert full_rings == early
     assert full_rings == keys(knn_join_brute(o, nb, k))
-
-
-def _n_persistent_rdds(spark) -> int:
-    return int(spark.sparkContext._jsc.sc().getPersistentRDDs().size())
-
-
-def test_rings_scoped_releases_caches(spark):
-    spark.catalog.clearCache()  # isolate from other tests' leftovers
-    base = _n_persistent_rdds(spark)
-    o = spark.createDataFrame(_points(21, 100))
-    nb = spark.createDataFrame(_points(22, 500))
-    k = 4
-    brute = knn_join_brute(o, nb, k).select(
-        "origin_id", "neighbor_id", "knn_rank"
-    ).toPandas()
-    with knn_join_rings_scoped(o, nb, k) as rings_df:
-        rings = rings_df.select(
-            "origin_id", "neighbor_id", "knn_rank"
-        ).toPandas()
-        assert _n_persistent_rdds(spark) > base  # caches live inside
-    assert _key_set(rings) == _key_set(brute)  # still exact
-    assert _n_persistent_rdds(spark) == base  # zero engine-owned blocks left
 
 
 def test_rings_sparse_neighbors_fallback(spark):

@@ -348,19 +348,3 @@ def test_ngram_jaccard_max_group_rows_guard(spark):
     # under the cap: runs normally (and unguarded stays unguarded)
     assert ngram_jaccard_pairs(docs, max_group_rows=50).count() > 0
     assert ngram_jaccard_pairs(docs).count() > 0
-
-
-def test_hash_near_dup_cache_registry(spark):
-    from geoengine.text import hash_near_dup_pairs
-
-    df = spark.createDataFrame(
-        [(1, 7), (2, 7), (3, 255 << 40)], "doc_id long, h long"
-    )
-    reg = []
-    out = hash_near_dup_pairs(df, "h", cache_registry=reg)
-    # (1,2) hamming 0 kept; doc 3 is a block-collision candidate (shared
-    # zero blocks) but at hamming 11 it is filtered
-    assert out.count() == 1
-    assert len(reg) == 1
-    for d in reg:
-        d.unpersist()

@@ -28,7 +28,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from geoengine import exprs  # noqa: E402
+from geoengine import exprs, storage  # noqa: E402
 from geoengine.session import get_spark  # noqa: E402
 
 N_FIXES_STATS = 20_000_000
@@ -139,11 +139,8 @@ def bench_level(cores: int, reps: int) -> dict[str, float]:
         # block between reps so reps measure identical cold work
         from geoengine.clusters import spatial_dbscan
 
-        reg = []
-        force(spatial_dbscan(db_src, DBSCAN_EPS_KM, DBSCAN_MIN_PTS,
-                             cache_registry=reg))
-        for h in reg:
-            h.unpersist()
+        with storage.scope():
+            force(spatial_dbscan(db_src, DBSCAN_EPS_KM, DBSCAN_MIN_PTS))
 
     from geoengine.interpolate import idw_interpolate, kde_cells
 
@@ -179,10 +176,8 @@ def bench_level(cores: int, reps: int) -> dict[str, float]:
 
     def run_emerging():
         # scoped cache: the gi_z slice frame feeds three consumers
-        reg = []
-        force(emerging_hotspots(em_src, EMERGE_HB, cache_registry=reg))
-        for h in reg:
-            h.unpersist()
+        with storage.scope():
+            force(emerging_hotspots(em_src, EMERGE_HB))
 
     jobs = {
         "trajectory_stats": lambda: trajectory_stats(st_src),
