@@ -21,8 +21,9 @@ would take 1M shuffles; star contraction takes ~20.
 Scale posture (100 TB): every stage shuffles on a single int64 node id;
 per-round lineage is truncated with localCheckpoint (swap for a reliable
 ``checkpoint`` dir on a real cluster — the call site is one line); the
-convergence probe is one tiny agg (count + order-independent xxhash64
-bit_xor fold) per round, so rounds cost two shuffles + one scalar action.
+convergence signature (count + order-independent xxhash64 bit_xor fold)
+is observed by that checkpoint's own job, so rounds cost two shuffles +
+one action.
 Component skew (one giant dup cluster) is bounded by the star invariant:
 large-star keeps every node's degree-to-larger-nodes, small-star touches
 only edges to smaller nodes, and the final state is a star whose hub is
@@ -31,37 +32,11 @@ the component MIN — the hot key holds |C| rows exactly once.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
+from . import gates
 from .storage import cache, checkpoint
-
-# Bounded small-graph fast path (guide §1.2: fix the distributed algorithm
-# first — here, skip it entirely when the graph provably fits one task).
-# The star-contraction loop costs ~2 shuffles + 2 actions PER ROUND and
-# converges in 3-6 rounds on real dedup/DBSCAN graphs: ~15 sequential
-# Spark jobs of latency for a graph that is often a few hundred thousand
-# edges. Below this edge count (known for free from the convergence
-# signature's count) the components are instead computed EXACTLY by one
-# vectorized min-label/pointer-jumping pass inside a single mapInPandas
-# task: 4M edges = 64 MB of int64 pairs, same order as the engine's
-# broadcast hard cap, and numpy converges in O(m log^2 n) vector ops
-# (~100 ms at the cap). At 100 TB the threshold simply never fires for
-# corpus-scale graphs and the certified distributed loop runs unchanged.
-CC_LOCAL_EDGES = int(os.environ.get("SPARK_GRAFT_CC_LOCAL_EDGES", "4000000"))
-
-# spatial_dbscan core-set broadcast gate: the auto-contraction probe
-# already counts core points in its (free) aggregate; at or below this
-# many cores the core-id set (and the equally-sized label frame) is
-# broadcast so the semi/anti/border joins stop re-shuffling the full
-# eps-pair set. 2M int64 ids ~ 80 MB as a broadcast hashed relation —
-# the same order as the engine's other broadcast caps. Env-overridable.
-_CORE_BROADCAST_ROWS = int(
-    os.environ.get("SPARK_GRAFT_DBSCAN_CORE_BCAST_ROWS", "2000000")
-)
-
 
 def _local_cc_labels(u: "np.ndarray", v: "np.ndarray"):  # noqa: F821
     """Vectorized exact connected components over dense-indexed edges:
@@ -169,16 +144,20 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def _edge_signature(edges: DataFrame) -> tuple:
-    """(count, xor-fold) set fingerprint in ONE scalar action. bit_xor of
-    xxhash64(u,v) is order- and partitioning-independent and overflow-free
-    (ANSI-safe, unlike an integer sum); inputs are distinct so xor
-    cancellation of duplicate rows cannot occur."""
-    row = edges.agg(
-        F.count("*").alias("n"),
+def _signed_checkpoint(edges: DataFrame):
+    """:func:`storage.checkpoint` of ``edges`` plus its (count, xor-fold)
+    set signature, observed by the checkpoint's own job (no extra
+    action). bit_xor of xxhash64(u,v) is order- and
+    partitioning-independent and overflow-free (ANSI-safe, unlike an
+    integer sum); inputs are distinct so xor cancellation of duplicate
+    rows cannot occur."""
+    obs = Observation()
+    out, release = checkpoint(edges.observe(
+        obs, F.count(F.lit(1)).alias("n"),
         F.expr("bit_xor(xxhash64(u, v))").alias("sig"),
-    ).first()
-    return (row["n"], row["sig"])
+    ))
+    row = obs.get
+    return out, release, (row["n"], row["sig"])
 
 
 def connected_components(
@@ -207,25 +186,24 @@ def connected_components(
     :func:`storage.scope` — without one, that one small edge-set block
     lives until GC + ContextCleaner collect it.
     """
-    edges, release = checkpoint(
+    edges, release, sig = _signed_checkpoint(
         _canon_edges(pairs.select(F.col(id1).alias("u"), F.col(id2).alias("v")))
     )
     # every branch emits (node, cluster_id) in the edge id type
     schema = edges.select(
         F.col("u").alias("node"), F.col("v").alias("cluster_id")
     ).schema
-    sig = _edge_signature(edges)
     if sig[0] == 0:
         # explicit empty frame: deriving from the released checkpoint
         # would only work by CollectLimit short-circuit
         release()
         return pairs.sparkSession.createDataFrame([], schema)
-    if sig[0] <= CC_LOCAL_EDGES and all(
+    if sig[0] <= gates.CC_LOCAL_EDGES and all(
         f.dataType.typeName() in ("long", "integer", "short", "byte")
         for f in edges.schema.fields
     ):
-        # bounded fast path (see CC_LOCAL_EDGES): identical labels, one
-        # job instead of ~(2 shuffles + 2 actions) x rounds. The label
+        # bounded fast path (see gates.CC_LOCAL_EDGES): identical labels,
+        # one job instead of ~(2 shuffles + 1 action) x rounds. The label
         # frame is eagerly checkpointed so both downstream consumers read
         # blocks instead of re-running the union-find.
         labels, _ = checkpoint(_cc_single_task(edges, schema))
@@ -233,10 +211,9 @@ def connected_components(
         return labels
     for _ in range(max_iter):
         # large-star output flows RAW into small-star (one canon per round)
-        edges2, release2 = checkpoint(
+        edges2, release2, sig2 = _signed_checkpoint(
             _canon_edges(_small_star(_large_star(edges)))
         )
-        sig2 = _edge_signature(edges2)
         release()  # superseded round's blocks, RDD-level release
         edges, release = edges2, release2
         converged, sig = sig2 == sig, sig2
@@ -457,7 +434,6 @@ def spatial_dbscan(
         with_grid_cell,
     )
     from .geodesy import to_km
-    from .knn import _session_broadcast_bytes
 
     if min_pts < 1:
         raise ValueError(f"min_pts must be >= 1, got {min_pts}")
@@ -520,10 +496,11 @@ def spatial_dbscan(
     # identical; with no probe (contract=False/None grid) or a large core
     # set the shuffle plan is unchanged — at 100 TB the gate never fires.
     # A session that disabled broadcasts (autoBroadcastJoinThreshold -1/0)
-    # never gets one forced, the same rule as the knn gates.
+    # never gets one forced (gates.broadcast_budget is 0 there).
     bcast_core = (
-        core_count is not None and core_count <= _CORE_BROADCAST_ROWS
-        and _session_broadcast_bytes(points) > 0
+        core_count is not None
+        and core_count <= gates.DBSCAN_CORE_BROADCAST_ROWS
+        and gates.broadcast_budget(points) > 0
     )
     core_b = F.broadcast(core) if bcast_core else core
 

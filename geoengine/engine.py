@@ -121,10 +121,3 @@ def search_miles(
 ) -> DataFrame:
     """Parity name for the reference's searchMiles (SparkDS.scala:34-45)."""
     return search(origins, neighbors, radius, "miles", max_results, **kw)
-
-
-def search_km(
-    origins: DataFrame, neighbors: DataFrame, radius: float,
-    max_results: int = 10, **kw,
-) -> DataFrame:
-    return search(origins, neighbors, radius, "km", max_results, **kw)

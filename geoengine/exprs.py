@@ -155,11 +155,6 @@ def cell_encode(lat: Column, lon: Column, bits: int) -> Column:
     return interleave(grid_ix(lon, hb), grid_iy(lat, hb), hb)
 
 
-def sql_cell_encode(lat: str, lon: str, bits: int) -> str:
-    hb = bits // 2
-    return sql_interleave(sql_grid_ix(lon, hb), sql_grid_iy(lat, hb), hb)
-
-
 # --------------------------------------------------------------------------
 # great-circle distance (law of cosines, km) — codegen'd, clamped acos
 # --------------------------------------------------------------------------

@@ -33,7 +33,6 @@ Scale posture (100 TB / 1000 executors):
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -61,9 +60,7 @@ def spread_small_input(df: DataFrame, *key_cols: Column) -> DataFrame:
     sources never trigger it), for streaming inputs (no static partition
     count), and when the partition count cannot be read.  The hash keys
     are data columns, never rand() (deterministic under task retry,
-    SPARK-38388).  ``SPARK_GRAFT_SPREAD=0`` disables it globally."""
-    if os.environ.get("SPARK_GRAFT_SPREAD", "1") == "0":
-        return df
+    SPARK-38388)."""
     try:
         if df.isStreaming:
             return df

@@ -22,12 +22,11 @@ brute when the neighbor side is small.
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from . import exprs
+from . import exprs, gates
 from .geodesy import EARTH_RADIUS_KM
 from .join import validate_points, with_grid_cell
 from .storage import cache
@@ -81,50 +80,12 @@ def knn_join_brute(origins: DataFrame, neighbors: DataFrame, k) -> DataFrame:
     return _ranked(_pairs_dist(o, F.broadcast(nb), "cross"), k)
 
 
-def _plan_stats(df: DataFrame) -> tuple[int | None, int | None]:
-    """(rowCount, sizeInBytes) from Catalyst plan statistics — NO job is
-    triggered (unlike ``df.count()``). rowCount is None unless the catalog
-    has exact stats; sizeInBytes for file sources is the COMPRESSED file
-    size (can be 10-20x below in-memory size).
-
-    This is the engine's ONE private-API dependency: ``df._jdf`` +
-    the py4j ``queryExecution().optimizedPlan().stats()`` chain. Exercised
-    against pyspark 4.1.x (classic, non-Connect); under Spark Connect
-    ``_jdf`` does not exist and any JVM-side rename raises — both land in
-    the except arm, and every caller (estimated_rows -> strategy/
-    resolution choices in knn/similarity) treats (None, None) as "stats
-    unknown" and falls back to a safe default plan, never an error.
-    tests/test_knn.py::test_plan_stats_fallback forces this path."""
-    try:
-        stats = df._jdf.queryExecution().optimizedPlan().stats()
-        rc = stats.rowCount()
-        rows = int(str(rc.get())) if rc.isDefined() else None
-        size = int(str(stats.sizeInBytes()))
-        return rows, (size if size > 0 else None)
-    except Exception:  # pragma: no cover - py4j surface differences
-        return None, None
-
-
-def estimated_rows(df: DataFrame, assumed_row_bytes: int = 48) -> int | None:
-    """Plan-statistics row estimate; log-scale accuracy only (strategy and
-    resolution choices, never correctness). Placeholder sizes from
-    stat-less leaves (spark.sql.defaultSizeInBytes, ~Long.MaxValue) are
-    treated as unknown, not as a measurement."""
-    rows, size = _plan_stats(df)
-    if rows is not None:
-        return rows
-    if size is None or size >= _STATS_UNKNOWN_BYTES:
-        return None
-    return max(size // assumed_row_bytes, 1)
-
-
 def knn_join_rings(
     origins: DataFrame,
     neighbors: DataFrame,
     k: int,
     half_bits: int | None = None,
     max_rounds: int = 3,
-    neighbor_count: int | None = None,
 ) -> DataFrame:
     """Exact kNN by iterative ring probing (see module docstring).
 
@@ -169,24 +130,22 @@ def knn_join_rings(
     # (guide §2.2); hash on origin_id so every round's top-k window and
     # per-origin aggregations reuse the partitioning
     o_all = spread_small_input(o_all, F.col("origin_id"))
-    nb = _prefixed(validate_points(neighbors), "neighbor_")
-
-    if neighbor_count is None:
-        neighbor_count = estimated_rows(nb)
-        if neighbor_count is None:
-            neighbor_count = nb.count()
+    # cached once and counted exactly: the count sizes the grid and the
+    # early-fallback gate, and its job fills the cache every round reads
+    nb = cache(_prefixed(validate_points(neighbors), "neighbor_"))
+    nb_n = nb.count()
     if half_bits is None:
         # aim for ~4k neighbors expected inside ring 1 (9 cells)
         density_target = max(k * 4, 16)
-        cells_needed = max(neighbor_count * 9 // density_target, 1)
+        cells_needed = max(nb_n * 9 // density_target, 1)
         half_bits = max(2, min(20, int(math.log2(max(cells_needed, 4))) // 2))
     hb = half_bits
     n = 1 << hb
     lat_cell_km = (180.0 / n) * KM_PER_DEG
 
-    nb = cache(with_grid_cell(
+    nb_cells = with_grid_cell(
         nb, hb, lat="neighbor_latitude", lon="neighbor_longitude", out="n_gkey"
-    ))
+    )
     pending = cache(o_all.withColumn(
         "_oix", exprs.grid_ix(F.col("origin_longitude"), hb)
     ).withColumn("_oiy", exprs.grid_iy(F.col("origin_latitude"), hb)))
@@ -194,29 +153,21 @@ def knn_join_rings(
     results = []
     acc: DataFrame | None = None  # pending origins' top-k-so-far candidates
     r, prev_r = 1, -1
-    pending_n: int | None = None  # known exactly from round 2 on
+    pending_n: int | None = None  # exact from the end of round 1 on
     for _ in range(max_rounds):
         if 2 * r + 1 > n:
             break  # shell would wrap the globe: no disjointness, fall back
-        if pending_n is None:
-            # round 1: cheap non-emptiness probe only (a count here would
-            # full-scan the origin table at scale)
-            if not pending.take(1):
-                break
-        else:
-            if pending_n == 0:
-                break
-            if pending_n * neighbor_count <= _FALLBACK_PAIRS_BUDGET:
-                # straggler set is small enough that the EXACT fallback
-                # cross join is a bounded, one-stage job: running it now
-                # is identical in results to more ring rounds (both are
-                # exact) but skips each remaining round's probe-join/
-                # window/anti-join chain (~0.5-1 s of sequential jobs per
-                # round; measured 2.3 s -> 1.3 s on the bench's 15k x 1k
-                # kNN). At scale neighbor_count alone exceeds the budget,
-                # so the ring loop runs in full — this only short-
-                # circuits the tail.
-                break
+        if (pending_n is not None
+                and pending_n * nb_n <= gates.KNN_FALLBACK_PAIRS):
+            # no stragglers left, or few enough that the EXACT fallback
+            # cross join is a bounded, one-stage job: running it now is
+            # identical in results to more ring rounds (both are exact)
+            # but skips each remaining round's probe-join/window/anti-join
+            # chain (~0.5-1 s of sequential jobs per round; measured
+            # 2.3 s -> 1.3 s on the bench's 15k x 1k kNN). At scale the
+            # neighbor count alone exceeds the budget, so the ring loop
+            # runs in full; this only short-circuits the tail.
+            break
         dx = F.explode(F.sequence(F.lit(-r), F.lit(r)))
         dy = F.explode(F.sequence(F.lit(-r), F.lit(r)))
         probe = (
@@ -240,7 +191,9 @@ def knn_join_rings(
             )
             .drop("_dx", "_dy")
         )
-        new_pairs = _pairs_dist(probe, nb, "inner", on="n_gkey").drop("n_gkey")
+        new_pairs = _pairs_dist(probe, nb_cells, "inner", on="n_gkey").drop(
+            "n_gkey"
+        )
         all_cand = new_pairs if acc is None else acc.unionByName(new_pairs)
         ranked = cache(_ranked(all_cand, k))  # read 3x: kth, done, carry
         # Guaranteed-covered radius of ring r at this origin's latitude —
@@ -301,10 +254,9 @@ def knn_join_rings(
     # exact fallback for origins no round could certify — NO broadcast hint:
     # the neighbor side may exceed broadcast capacity (that's why rings was
     # selected); AQE may still pick a broadcast when it turns out small.
-    if pending_n if pending_n is not None else pending.take(1):
+    if pending_n != 0:
         rest = _ranked(
-            _pairs_dist(pending.drop("_oix", "_oiy"), nb.drop("n_gkey"), "cross"),
-            k,
+            _pairs_dist(pending.drop("_oix", "_oiy"), nb, "cross"), k
         )
         results.append(rest)
 
@@ -312,75 +264,6 @@ def knn_join_rings(
     for x in results[1:]:
         out = out.unionByName(x)
     return out
-
-
-# stat-less leaves report spark.sql.defaultSizeInBytes (Long.MaxValue by
-# default) — any "size" past this is a placeholder, not a measurement
-_STATS_UNKNOWN_BYTES = 1 << 48
-
-# rings early-fallback budget: once |pending| * |neighbors| fits this many
-# candidate pairs, the EXACT cross-join fallback finishes the stragglers in
-# one bounded stage instead of paying further ring rounds' sequential-job
-# chains. 64M pairs ~ 2M trig evals/core on a 32-way stage — well under a
-# second; a large neighbor table alone exceeds it, so the scale path is
-# unaffected. Env-overridable for clusters with different core budgets.
-_FALLBACK_PAIRS_BUDGET = int(
-    os.environ.get("SPARK_GRAFT_KNN_FALLBACK_PAIRS", str(64 << 20))
-)
-
-_BROADCAST_HARD_CAP = 64 << 20
-
-
-def _neighbor_broadcast_fit(
-    neighbors: DataFrame,
-    rows_threshold: int,
-    bytes_threshold: int,
-) -> tuple[bool | None, int | None, int | None]:
-    """The ONE stats/threshold decision both knn_join gates share:
-    (fits, rows, size) where fits is True (broadcast-small), False
-    (demonstrably big), or None (stats unknown). Callers resolve
-    ``bytes_threshold`` themselves — the two gates treat a
-    broadcasts-disabled session (conf -1/0 -> _session_broadcast_bytes 0)
-    differently by design: the auto router respects it and falls to rings
-    (0 here makes every known size 'not fit'), while the per-row-k gate
-    substitutes the 64 MiB hard cap (the conf forbids CATALYST's implicit
-    broadcasts, not the explicit F.broadcast hint brute uses — a 0 gate
-    would wrongly raise on a 2 KB table that worked before the gate
-    existed)."""
-    rows, size = _plan_stats(neighbors)
-    if size is not None and size >= _STATS_UNKNOWN_BYTES:
-        size = None  # defaultSizeInBytes placeholder, not a measurement
-    if rows is None and size is None:
-        return None, None, None
-    fits = rows <= rows_threshold if rows is not None else size <= bytes_threshold
-    return fits, rows, size
-
-
-def _session_broadcast_bytes(df: DataFrame, cap: int = 64 << 20) -> int:
-    """Broadcast gate keyed off the session's own
-    spark.sql.autoBroadcastJoinThreshold (x6: parquet sizeInBytes is
-    compressed, Catalyst's knob is in-memory-ish) but HARD-CAPPED at
-    64 MiB compressed — the gate forces an explicit F.broadcast and
-    compressed parquet can expand 10-20x in memory, so a session tuned
-    with a big threshold must not drag the gate past ~1.3 GB of build-side
-    heap. A small session threshold shrinks the gate proportionally; an
-    DISABLED conf (-1/0 — the operator explicitly forbade broadcasts)
-    returns 0 so the size gate never forces one; an unparsable conf falls
-    back to the cap."""
-    try:
-        raw = df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        s = str(raw).strip().lower()
-        mult = 1
-        for suf, m in (("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-                       ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30),
-                       ("b", 1)):
-            if s.endswith(suf):
-                s, mult = s[: -len(suf)], m
-                break
-        v = int(float(s)) * mult
-        return min(v * 6, cap) if v > 0 else 0
-    except Exception:  # pragma: no cover - conf surface differences
-        return cap
 
 
 def knn_join(
@@ -409,15 +292,16 @@ def knn_join(
         # neighbor table raises HERE (with the rings-at-max-k recipe)
         # instead of OOMing an executor. strategy='brute' is the explicit
         # override. A broadcasts-disabled session falls back to the hard
-        # cap (see _neighbor_broadcast_fit — rings is not an option here).
+        # cap (see gates.neighbor_broadcast_fit; rings is not an option
+        # here).
         if strategy != "brute":
             bt = (
                 broadcast_threshold_bytes
                 if broadcast_threshold_bytes is not None
-                else (_session_broadcast_bytes(neighbors)
-                      or _BROADCAST_HARD_CAP)
+                else (gates.broadcast_budget(neighbors)
+                      or gates.BROADCAST_HARD_CAP)
             )
-            fits, rows, size = _neighbor_broadcast_fit(
+            fits, rows, size = gates.neighbor_broadcast_fit(
                 neighbors, broadcast_threshold_rows, bt
             )
             if fits is False:
@@ -452,21 +336,13 @@ def knn_join(
     # clusters configured with a low broadcast budget never get a ~GB
     # in-memory broadcast from a "small" file.
     if broadcast_threshold_bytes is None:
-        broadcast_threshold_bytes = _session_broadcast_bytes(neighbors)
-    fits, rows, size = _neighbor_broadcast_fit(
+        broadcast_threshold_bytes = gates.broadcast_budget(neighbors)
+    fits, _, _ = gates.neighbor_broadcast_fit(
         neighbors, broadcast_threshold_rows, broadcast_threshold_bytes
     )
-    if fits is None:
-        # stat-less source (JDBC/RDD-backed leaf): no eager count HERE —
-        # route conservatively to rings (broadcasting an unknown-size side
-        # is the unsafe direction). Rings pays one count() of the neighbor
-        # side to size half_bits — genuinely required; pass half_bits +
-        # neighbor_count to make the whole path job-free at plan time.
-        return knn_join_rings(origins, neighbors, k, **kw)
     if fits:
         return knn_join_brute(origins, neighbors, k)
-    # forward the estimate so rings doesn't redo the stats round-trip
-    kw.setdefault(
-        "neighbor_count", rows if rows is not None else max(size // 48, 1)
-    )
+    # demonstrably big, or a stat-less source (JDBC/RDD-backed leaf):
+    # broadcasting an unknown-size side is the unsafe direction. Rings
+    # counts its cached neighbor side exactly for its own sizing.
     return knn_join_rings(origins, neighbors, k, **kw)

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from . import exprs
+from . import exprs, gates
 from .join import with_grid_cell
 
 
@@ -131,10 +131,11 @@ def points_in_multipolygons(
     broadcast/shuffle payload by the covering fanout (measured 22 MB vs
     3 MB for 6 wide polygons) and serialized a parallelism-independent
     broadcast-build term into every run. The geometry attach is
-    broadcast-HINTED only while the polygon side's plan-stats size sits
-    under the same 64 MiB cap the kNN brute path uses — a million-fence
-    corpus falls back to a planner-chosen join instead of OOMing the
-    driver. Both frames derive from ONE shared polygon-prep subtree.
+    broadcast-HINTED only while the polygon side's plan-stats size fits
+    the session's broadcast budget (the gate the kNN brute path uses) — a
+    million-fence corpus falls back to a planner-chosen join instead of
+    OOMing the driver. Both frames derive from ONE shared polygon-prep
+    subtree.
     """
     prep = _prepped_polygons(polygons, poly_id, rings_col)
     cov_full = _covering_from_prep(prep, half_bits, poly_id)
@@ -175,21 +176,16 @@ def points_in_multipolygons(
     return hit.select(F.col(point_id).alias("point_id"), poly_id, *keep)
 
 
-_GEOM_BROADCAST_CAP = 64 << 20  # bytes; matches knn_join_brute's hard cap
-
-
 def _geometry_frame(prep: DataFrame) -> DataFrame:
     """Per-DISTINCT-geometry attach frame, broadcast-hinted only when the
-    polygon side is plausibly small (plan-stats sizeInBytes under 64 MiB
-    — same seam and cap as knn._plan_stats; unknown stats fall back to
-    the planner's own choice)."""
-    from .knn import _plan_stats
-
+    polygon side's plan-stats size fits :func:`gates.broadcast_budget`
+    (never under a disabled conf; unknown stats fall back to the
+    planner's own choice)."""
     geom = prep.select("_geom_key", "_wrap", "_rlat", "_rlon").dropDuplicates(
         ["_geom_key"]
     )
-    _, size = _plan_stats(prep)
-    if size is not None and size <= _GEOM_BROADCAST_CAP:
+    _, size = gates.plan_stats(prep)
+    if size is not None and size <= gates.broadcast_budget(prep):
         return F.broadcast(geom)
     return geom
 

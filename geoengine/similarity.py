@@ -141,7 +141,7 @@ def auto_n_centroids(
     (in-memory relations, spark.range projections) report synthetic tiny
     sizes and so UNDER-size the codebook — conservative (more exact work
     per probe, never wrong results); pass n_centroids explicitly there."""
-    from .knn import estimated_rows
+    from .gates import estimated_rows
 
     rows = estimated_rows(corpus, assumed_row_bytes=assumed_row_bytes)
     if rows is None:

@@ -69,12 +69,3 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
 
 def read_points_orc(spark: SparkSession, path: str, **renames: str) -> DataFrame:
     return coerce_points(read_orc(spark, path), **renames)
-
-
-def read_points_parquet(spark: SparkSession, path: str, **renames: str) -> DataFrame:
-    return coerce_points(spark.read.parquet(path), **renames)
-
-
-def read_points_table(spark: SparkSession, name: str, **renames: str) -> DataFrame:
-    """R1: spark.table source (metastore/catalog-managed)."""
-    return coerce_points(spark.table(name), **renames)

@@ -5,11 +5,13 @@ localCheckpoint goes through :func:`cache` / :func:`checkpoint`, and one
     with storage.scope():
         rows = spatial_dbscan(points, 10.0, 8).collect()
 
-Outside a scope both behave like the bare Spark calls. Caches are
-released with ``Dataset.unpersist`` (the only call that also drops the
+Outside a scope nothing is released, but :func:`cache` still first drops
+any equal-plan CacheManager entry, so a block left by an earlier call
+(planned under that call's conf) is never reused. Caches are released
+with ``Dataset.unpersist`` (the only call that also drops the
 CacheManager entry); checkpoint blocks, which ``Dataset.unpersist`` does
 NOT free, by RDD id through the ``getPersistentRDDs`` py4j seam — the
-engine's second private-API dependency, next to ``knn._plan_stats``.
+engine's second private-API dependency, next to ``gates.plan_stats``.
 """
 
 from __future__ import annotations
@@ -45,7 +47,11 @@ def _register(release: Callable[[], None]) -> None:
 
 
 def cache(df: DataFrame) -> DataFrame:
-    """``df.cache()``, unpersisted when the active scope (if any) exits."""
+    """``df.cache()``, unpersisted when the active scope (if any) exits.
+    Any CacheManager entry with an equal plan is dropped first: it was
+    planned under the conf of whichever call cached it, so reusing it
+    would carry that conf's choices (a broadcast, say) into this call."""
+    df.unpersist()
     df = df.cache()
     _register(df.unpersist)
     return df

@@ -380,32 +380,6 @@ def streaming_radius_pairs_per_row(
     )
 
 
-def streaming_cell_counts(
-    stream: DataFrame,
-    half_bits: int,
-    ts_col: str = "ts",
-    lat_col: str = "latitude",
-    lon_col: str = "longitude",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Same rollup keyed by grid cell (index-maintenance shape: the batch
-    neighbor index can be incrementally refreshed from this stream)."""
-    stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(
-            F.window(F.col(ts_col), window),
-            exprs.grid_key(
-                exprs.grid_ix(F.col(lon_col), half_bits),
-                exprs.grid_iy(F.col(lat_col), half_bits),
-                half_bits,
-            ).alias("gkey"),
-        )
-        .agg(F.count("*").alias("n_points"))
-    )
-
-
 def streaming_staypoints(
     stream_points: DataFrame,
     move_km: float,

@@ -201,11 +201,6 @@ def fingerprint_expr(text_col) -> "F.Column":
     ).cast("long")
 
 
-def sql_fingerprint(text_col: str) -> str:
-    """DuckDB twin of fingerprint_expr (same 60-bit integer)."""
-    return f"CAST(('0x' || substr(md5({text_col}), 1, 15)) AS BIGINT)"
-
-
 def band_bucket_expr(bands: int, rows: int, sig_col: str = "sig"):
     """Exploded (band, bucket) struct array over a MinHash signature —
     ANSI-safe xxhash64 fold per band. Single definition shared by every

@@ -79,39 +79,6 @@ def test_empty_pairs(spark):
     assert connected_components(pairs).count() == 0
 
 
-@pytest.mark.parametrize("seed,id_type", [
-    pytest.param(11, "long", id="11"),
-    pytest.param(41, "long", id="41"),
-    pytest.param(11, "int", id="11-int"),
-])
-def test_local_fast_path_equals_star_loop(spark, seed, id_type, monkeypatch):
-    """Round-6 optimization guard: the bounded single-task min-label fast
-    path (CC_LOCAL_EDGES) and the distributed star loop must produce
-    IDENTICAL (node, cluster_id) sets AND the same schema on the same
-    graph — chain + blobs + random noise edges cover deep, wide and
-    disconnected components; int ids check the id type is kept."""
-    import geoengine.clusters as C
-
-    rng = random.Random(seed)
-    edges = [(i, i + 1) for i in range(40)]  # deep chain
-    edges += [(100, 100 + j) for j in range(1, 20)]  # star hub
-    edges += [(rng.randrange(300), rng.randrange(300)) for _ in range(120)]
-    edges = [(a, b) for a, b in edges if a != b]
-    pairs = spark.createDataFrame(edges, f"doc1 {id_type}, doc2 {id_type}")
-
-    def run():
-        out = connected_components(pairs)
-        return out.schema, {(r["node"], r["cluster_id"]) for r in out.collect()}
-
-    fast = run()  # default threshold: fast path fires
-    monkeypatch.setattr(C, "CC_LOCAL_EDGES", 0)  # force the star loop
-    slow = run()
-    assert fast[0] == slow[0]
-    assert [f.dataType.typeName() for f in fast[0]] == [
-        "long" if id_type == "long" else "integer"] * 2
-    assert fast[1] == slow[1]
-
-
 def test_local_cc_labels_kernel():
     """The numpy min-label/pointer-jumping kernel against the pure-Python
     union-find twin on an adversarial graph (long chain joined backwards
@@ -362,40 +329,6 @@ def test_dbscan_contract_invariance_blobs(spark):
     )
     n_cells = with_grid_cell(df, hb_c, out="sc").select("sc").distinct().count()
     assert n_cells > 3  # more cells than clusters -> contraction non-trivial
-
-
-def test_dbscan_respects_disabled_broadcasts(spark):
-    """autoBroadcastJoinThreshold=-1 forbids broadcasts: the core-set
-    broadcast gate must not force one, and the rows must equal the
-    default conf's (where the gate fires)."""
-    from geoengine import storage
-    from geoengine.clusters import spatial_dbscan
-
-    rng = random.Random(5)
-    pts = [(i, 10.0 + rng.uniform(-0.7, 0.7), 10.0 + rng.uniform(-0.7, 0.7))
-           for i in range(60)]
-    pts += [(60 + i, rng.uniform(-80, 80), rng.uniform(-170, 170))
-            for i in range(20)]
-    df = spark.createDataFrame(pts, "id long, latitude double, longitude double")
-
-    def run():
-        # scoped: the next run must not reuse this run's cached pair set
-        with storage.scope():
-            out = spatial_dbscan(df, 60.0, 5)  # contract='auto' probes cores
-            rows = sorted(map(tuple, out.collect()))
-            return rows, out._jdf.queryExecution().executedPlan().toString()
-
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    old = spark.conf.get(key)
-    default_rows, default_plan = run()
-    spark.conf.set(key, "-1")
-    try:
-        rows, plan = run()
-    finally:
-        spark.conf.set(key, old)
-    assert "BroadcastExchange" in default_plan
-    assert "BroadcastExchange" not in plan
-    assert rows == default_rows
 
 
 @pytest.mark.parametrize("seed", [3])

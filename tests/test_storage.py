@@ -1,7 +1,7 @@
 """storage.scope(): every block an operator caches or checkpoints is
 released when the enclosing scope exits — one leak test per caching
 operator, plus the scope's own nesting / exception / double-release
-rules."""
+rules, and no stale plan reused by an unscoped cache."""
 
 import random
 
@@ -69,11 +69,12 @@ def _knn_check(spark, rows):
 
 def _cc(local: bool):
     def build(spark, monkeypatch):
-        import geoengine.clusters as C
+        from geoengine import gates
+        from geoengine.clusters import connected_components
 
         if not local:
-            monkeypatch.setattr(C, "CC_LOCAL_EDGES", 0)  # force the star loop
-        return C.connected_components(_chain(spark))
+            monkeypatch.setattr(gates, "CC_LOCAL_EDGES", 0)  # the star loop
+        return connected_components(_chain(spark))
 
     return build
 
@@ -215,3 +216,35 @@ def test_scope_nests_releases_on_error_and_release_is_idempotent(spark):
     bare.count()
     assert len(_persistent_rdd_ids(spark) - base) == 1
     bare.unpersist()
+
+
+def test_unscoped_cache_follows_the_current_conf(spark):
+    """A block cached outside any scope was planned under the conf of the
+    call that cached it; a later call with an equal plan must not reuse
+    it. dbscan's eps-pair cache is planned with a broadcast join under
+    the default conf and must hold none once broadcasts are disabled."""
+    from geoengine.clusters import spatial_dbscan
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.catalog.clearCache()
+
+    df = _diagonal(spark)  # one frame: both calls plan the same pair set
+
+    def run():
+        out = spatial_dbscan(df, 5.0, 3)  # no scope
+        rows = out.collect()
+        return rows, out._jdf.queryExecution().executedPlan().toString()
+
+    try:
+        default_rows, default_plan = run()
+        spark.conf.set(key, "-1")
+        rows, plan = run()
+    finally:
+        spark.conf.set(key, old)
+        spark.catalog.clearCache()
+    assert "BroadcastHashJoin" in default_plan
+    assert "BroadcastHashJoin" not in plan
+    assert "BroadcastExchange" not in plan
+    _dbscan_check(spark, rows)
+    assert sorted(map(tuple, rows)) == sorted(map(tuple, default_rows))
