@@ -115,18 +115,15 @@ def _cc_types(id_type):
 
 
 CC_BRANCHES = [Branch("local"), Branch("star_loop", {"CC_LOCAL_EDGES": 0})]
-BROADCAST_BRANCHES = {
-    "dbscan_core_broadcast": [
+
+
+def _broadcast_branches(off_patch):
+    return [
         Branch("on", broadcast=True),
-        Branch("off", {"DBSCAN_CORE_BROADCAST_ROWS": 0}),
+        Branch("off", off_patch),
         Branch("disabled_conf", conf="-1", broadcast=False),
-    ],
-    "pip_geometry_broadcast": [
-        Branch("on", broadcast=True),
-        Branch("off", {"BROADCAST_HARD_CAP": 0}),
-        Branch("disabled_conf", conf="-1", broadcast=False),
-    ],
-}
+    ]
+
 
 # name -> (build, branches, extra check on the first branch's rows/schema)
 CASES = {
@@ -138,9 +135,9 @@ CASES = {
         Branch("budget_2^60", {"KNN_FALLBACK_PAIRS": 1 << 60}),  # fire early
     ], _knn_equals_brute),
     "dbscan_core_broadcast": (
-        _dbscan, BROADCAST_BRANCHES["dbscan_core_broadcast"], None),
+        _dbscan, _broadcast_branches({"DBSCAN_CORE_BROADCAST_ROWS": 0}), None),
     "pip_geometry_broadcast": (
-        _pip, BROADCAST_BRANCHES["pip_geometry_broadcast"], None),
+        _pip, _broadcast_branches({"BROADCAST_HARD_CAP": 0}), None),
 }
 
 
