@@ -308,7 +308,7 @@ def dedup_documents(
     components -> keeper decision. Returns docs + (cluster_id, is_keeper);
     ``.where("is_keeper")`` is the deduplicated corpus. Every stage is the
     corresponding certified operator, just wired together; ``lsh_kw``
-    forwards banding/block tuning (num_hashes/bands/block_bits/items)."""
+    forwards banding/block tuning (num_hashes/bands/block_bits)."""
     from .text import lsh_verified_jaccard_pairs
 
     pairs = lsh_verified_jaccard_pairs(

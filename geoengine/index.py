@@ -13,6 +13,9 @@ one cell holds 10^8 points while the median holds 10^2):
   join key:    gkey * MAX_SALT + salt         (still a dense int64)
 
 Salting is result-invariant (property-tested in tests/test_salting.py).
+Both index-backed joins here are join._radius_join_core with a different
+build side or key: the salted join re-keys both sides of the core, the
+bucketed join hands it the prebuilt table as its build side.
 """
 
 from __future__ import annotations
@@ -22,7 +25,14 @@ from pyspark.sql import functions as F
 
 from . import exprs
 from .geodesy import to_km
-from .join import explode_covering_cells, validate_points, with_grid_cell
+from .join import (
+    _keyed_build_side,
+    _per_row_radius,
+    _radius_join_core,
+    pick_half_bits,
+    validate_points,
+    with_grid_cell,
+)
 from .storage import cache
 
 MAX_SALT = 256
@@ -59,67 +69,42 @@ def radius_join_pairs_salted(
     neighbors: DataFrame,
     radius: float,
     unit: str = "km",
-    half_bits: int = 12,
+    half_bits: int | None = None,
     hot_threshold: int = 100_000,
     max_salt: int = MAX_SALT,
     origin_prefix: str = "origin_",
     neighbor_prefix: str = "neighbor_",
 ) -> DataFrame:
-    """radius_join_pairs twin with explicit hot-cell salting (same output)."""
+    """radius_join_pairs with explicit hot-cell salting (same output): the
+    join core with both sides re-keyed to ``gkey * MAX_SALT + salt``.
+    ``half_bits=None`` sizes the grid from the radius, as
+    radius_join_pairs does."""
     radius_km = to_km(float(radius), unit)
-    o = validate_points(origins)
-    nb = validate_points(neighbors)
-    hot = F.broadcast(hot_cells(nb, half_bits, hot_threshold, max_salt))
+    hb = half_bits if half_bits is not None else pick_half_bits(radius_km)
+    hot = F.broadcast(hot_cells(neighbors, hb, hot_threshold, max_salt))
+    factor = F.col("salt_factor")
+    build_salt = F.coalesce(
+        F.pmod(F.xxhash64(F.col(neighbor_prefix + "id")), factor), F.lit(0)
+    )
+    probe_salts = F.explode(
+        F.sequence(F.lit(0), F.coalesce(factor, F.lit(1)) - 1)
+    )
 
-    o = o.select([F.col(c).alias(origin_prefix + c) for c in o.columns])
-    nb = nb.select([F.col(c).alias(neighbor_prefix + c) for c in nb.columns])
+    def salted(df: DataFrame, salt) -> DataFrame:
+        return (
+            df.join(hot, "gkey", "left")
+            .withColumn("_salt", salt)
+            .withColumn("gkey", F.col("gkey") * MAX_SALT + F.col("_salt"))
+            .drop("salt_factor", "_salt")
+        )
 
-    build = (
-        with_grid_cell(
-            nb, half_bits, lat=neighbor_prefix + "latitude",
-            lon=neighbor_prefix + "longitude",
-        )
-        .join(hot, "gkey", "left")
-        .withColumn(
-            "_salt",
-            F.when(
-                F.col("salt_factor").isNotNull(),
-                F.pmod(
-                    F.xxhash64(F.col(neighbor_prefix + "id")),
-                    F.col("salt_factor"),
-                ),
-            ).otherwise(F.lit(0)),
-        )
-        .withColumn("skey", F.col("gkey") * MAX_SALT + F.col("_salt"))
-        .drop("salt_factor", "_salt", "gkey")
-    )
-    probe = (
-        explode_covering_cells(
-            o, radius_km, half_bits, lat=origin_prefix + "latitude",
-            lon=origin_prefix + "longitude",
-        )
-        .join(hot, "gkey", "left")
-        .withColumn(
-            "_salt",
-            F.explode(
-                F.sequence(F.lit(0), F.coalesce(F.col("salt_factor"), F.lit(1)) - 1)
-            ),
-        )
-        .withColumn("skey", F.col("gkey") * MAX_SALT + F.col("_salt"))
-        .drop("salt_factor", "_salt", "gkey")
-    )
-    d_km = exprs.dist_km(
-        F.col(origin_prefix + "latitude"),
-        F.col(origin_prefix + "longitude"),
-        F.col(neighbor_prefix + "latitude"),
-        F.col(neighbor_prefix + "longitude"),
-    )
-    return (
-        probe.join(build, "skey")
-        .withColumn("distance_km", d_km)
-        .where(F.col("distance_km") <= F.lit(radius_km))
-        .withColumn("distance", exprs.km_as_unit(F.col("distance_km"), F.lit(unit)))
-        .drop("skey")
+    return _radius_join_core(
+        origins, _keyed_build_side(neighbors, hb, neighbor_prefix),
+        F.lit(radius_km), hb, F.lit(unit), "auto", origin_prefix,
+        neighbor_prefix, True,
+        rekey=lambda probe, build: (
+            salted(probe, probe_salts), salted(build, build_salt)
+        ),
     )
 
 
@@ -191,14 +176,7 @@ def write_bucketed_neighbor_index(
     Columns are stored pre-prefixed (neighbor_id, neighbor_latitude,
     neighbor_longitude, gkey) so the query side joins directly.
     """
-    nb = validate_points(neighbors).select(
-        *[F.col(c).alias(neighbor_prefix + c) for c in neighbors.columns]
-    )
-    keyed = with_grid_cell(
-        nb, half_bits,
-        lat=neighbor_prefix + "latitude",
-        lon=neighbor_prefix + "longitude",
-    )
+    keyed = _keyed_build_side(neighbors, half_bits, neighbor_prefix)
     (
         keyed.write.mode("overwrite")
         .format("parquet")
@@ -235,9 +213,10 @@ def radius_join_pairs_bucketed(
     half_bits: int | None = None,
     origin_prefix: str = "origin_",
 ) -> DataFrame:
-    """Radius join against a pre-bucketed neighbor index table: identical
-    results to join.radius_join_pairs, but the build side is scanned in
-    bucket order with no Exchange (plan-asserted in tests). The join MUST
+    """Radius join against a pre-bucketed neighbor index table: the join
+    core with the table as its build side, so identical results to
+    join.radius_join_pairs, but the build side is scanned in bucket order
+    with no Exchange (plan-asserted in tests). The join MUST
     run at the resolution the index was built at — it is read from the
     table properties and validated against half_bits when both exist
     (a mismatch would silently drop every pair).
@@ -266,40 +245,13 @@ def radius_join_pairs_bucketed(
             f"index {index_table!r} records no geoengine.half_bits property "
             "and none was given"
         )
-    o = validate_points(origins).select(
-        *[F.col(c).alias(origin_prefix + c) for c in origins.columns]
-    )
     if per_row:
-        if unit_col is None:
-            to_km(1.0, unit)  # validate eagerly: radius_as_km has no
-            # otherwise branch, so an unknown unit would NULL every radius
-            # and silently return zero pairs where the float branch raises
-            unit_expr = F.lit(unit)
-        else:
-            unit_expr = F.col(origin_prefix + unit_col)
-        r_km = exprs.radius_as_km(
-            F.col(origin_prefix + radius).cast("double"), unit_expr
-        )
+        r_km, unit_expr = _per_row_radius(radius, unit, unit_col, origin_prefix)
     else:
-        unit_expr = F.lit(unit)
-        r_km = F.lit(to_km(float(radius), unit))
-    probe = explode_covering_cells(
-        o, r_km, hb,
-        lat=origin_prefix + "latitude", lon=origin_prefix + "longitude",
-    )
-    build = spark.table(index_table)
-    d_km = exprs.dist_km(
-        F.col(origin_prefix + "latitude"),
-        F.col(origin_prefix + "longitude"),
-        F.col("neighbor_latitude"),
-        F.col("neighbor_longitude"),
-    )
-    return (
-        probe.join(build, "gkey")
-        .withColumn("distance_km", d_km)
-        .where(F.col("distance_km") <= r_km)
-        .withColumn("distance", exprs.km_as_unit(F.col("distance_km"), unit_expr))
-        .drop("gkey")
+        r_km, unit_expr = F.lit(to_km(float(radius), unit)), F.lit(unit)
+    return _radius_join_core(
+        origins, spark.table(index_table), r_km, hb, unit_expr, "auto",
+        origin_prefix, "neighbor_", True,
     )
 
 

@@ -22,8 +22,8 @@ where the reference degrades to a full scan via an empty LIKE prefix).
 Scale posture (100 TB / 1000 executors):
   - join key is a single int64 → dense shuffle, AQE skew-split applies;
   - small neighbor side → explicit ``F.broadcast`` (strategy='broadcast');
-  - hot cells → deterministic salting (``index.salt_build_side``) on top of
-    AQE as backstop;
+  - hot cells → deterministic salting (``index.radius_join_pairs_salted``,
+    this core with both sides re-keyed) on top of AQE as backstop;
   - distance refinement is whole-stage-codegen'd Column math, no Python;
   - the exploded origin side multiplies rows ~(2+g)^2 where g = guard cells,
     so resolution auto-picks cell size ≈ radius to keep fanout ~9-25x of the
@@ -260,38 +260,73 @@ def radius_join_pairs_prefix(
     )
 
 
+def _keyed_build_side(
+    neighbors: DataFrame, hb: int, neighbor_prefix: str, validate: bool = True
+) -> DataFrame:
+    """The build (index) side of every radius join: validate -> prefix-alias
+    -> single grid cell ``gkey``. index.write_bucketed_neighbor_index
+    stores exactly this frame, so its table drops in as the core's build
+    side with no re-keying."""
+    if validate:
+        neighbors = validate_points(neighbors)
+    nb = neighbors.select(
+        [F.col(c).alias(neighbor_prefix + c) for c in neighbors.columns]
+    )
+    return with_grid_cell(
+        nb, hb, lat=neighbor_prefix + "latitude",
+        lon=neighbor_prefix + "longitude",
+    )
+
+
+def _per_row_radius(
+    radius_col: str, unit: str, unit_col: str | None, origin_prefix: str
+) -> tuple[Column, Column]:
+    """(radius in km, reporting unit) expressions for a per-row radius
+    column on the ``origin_prefix``-aliased origins. A uniform ``unit`` is
+    validated eagerly: radius_as_km has no otherwise branch, so an unknown
+    unit would NULL every radius and silently return zero pairs."""
+    if unit_col is None:
+        to_km(1.0, unit)
+        unit_expr = F.lit(unit)
+    else:
+        unit_expr = F.col(origin_prefix + unit_col)
+    r_km = exprs.radius_as_km(
+        F.col(origin_prefix + radius_col).cast("double"), unit_expr
+    )
+    return r_km, unit_expr
+
+
 def _radius_join_core(
     origins: DataFrame,
-    neighbors: DataFrame,
-    r_km_of,
+    build: DataFrame,
+    r_km: Column,
     hb: int,
-    unit_of,
+    unit: Column,
     strategy: str,
     origin_prefix: str,
     neighbor_prefix: str,
     validate: bool,
+    rekey=None,
 ) -> DataFrame:
-    """The ONE radius-join pipeline both public surfaces share: validate ->
-    prefix-alias -> per-origin covering-cell explode at ``r_km_of``'s
-    radius -> single int64 equi-join -> codegen'd law-of-cosines ``<=``
-    refinement against the same radius -> distance in the inquiry unit.
+    """The ONE radius-join pipeline every surface shares: validate ->
+    prefix-alias -> per-origin covering-cell explode at radius ``r_km`` ->
+    single int64 equi-join with ``build`` -> codegen'd law-of-cosines
+    ``<=`` refinement against the same radius -> distance in ``unit``.
 
-    ``r_km_of()`` / ``unit_of()`` build the radius-in-km and
-    reporting-unit expressions AFTER origin columns are prefixed, so each
-    can be a literal (uniform inquiry) or reference a per-row origin
-    column. Using one core keeps coverage math, boundary semantics (`<=`,
+    ``r_km`` / ``unit`` are literals (uniform inquiry) or reference
+    per-row columns of the prefixed origins. ``build`` is a keyed neighbor
+    frame: :func:`_keyed_build_side` of the neighbors, or the bucketed
+    table it was written to. ``rekey(probe, build)``, when given, returns
+    both sides with a replaced ``gkey`` (index.py's hot-cell salting).
+    Using one core keeps coverage math, boundary semantics (`<=`,
     strictly-greater dropped, SparkDS.scala:87-90) and unit reporting from
     ever diverging between the surfaces.
     """
     if validate:
         origins = validate_points(origins)
-        neighbors = validate_points(neighbors)
 
     o = origins.select(
         [F.col(c).alias(origin_prefix + c) for c in origins.columns]
-    )
-    nb = neighbors.select(
-        [F.col(c).alias(neighbor_prefix + c) for c in neighbors.columns]
     )
 
     # spread a narrow scan across the cluster BEFORE the fanout; hashing on
@@ -305,15 +340,12 @@ def _radius_join_core(
     )
     o = spread_small_input(o, *spread_keys)
 
-    r_km = r_km_of()
     probe = explode_covering_cells(
         o, r_km, hb,
         lat=origin_prefix + "latitude", lon=origin_prefix + "longitude",
     )
-    build = with_grid_cell(
-        nb, hb, lat=neighbor_prefix + "latitude",
-        lon=neighbor_prefix + "longitude",
-    )
+    if rekey is not None:
+        probe, build = rekey(probe, build)
     if strategy == "broadcast":
         build = F.broadcast(build)
     # strategy == "auto": no hint — Catalyst's autoBroadcastJoinThreshold
@@ -331,9 +363,7 @@ def _radius_join_core(
         probe.join(build, "gkey")
         .withColumn("distance_km", d_km)
         .where(F.col("distance_km") <= r_km)
-        .withColumn(
-            "distance", exprs.km_as_unit(F.col("distance_km"), unit_of())
-        )
+        .withColumn("distance", exprs.km_as_unit(F.col("distance_km"), unit))
         .drop("gkey")
     )
 
@@ -363,9 +393,9 @@ def radius_join_pairs(
     radius_km = to_km(float(radius), unit)
     hb = half_bits if half_bits is not None else pick_half_bits(radius_km)
     return _radius_join_core(
-        origins, neighbors, lambda: F.lit(radius_km), hb,
-        lambda: F.lit(unit), strategy, origin_prefix, neighbor_prefix,
-        validate,
+        origins, _keyed_build_side(neighbors, hb, neighbor_prefix, validate),
+        F.lit(radius_km), hb, F.lit(unit), strategy, origin_prefix,
+        neighbor_prefix, validate,
     )
 
 
@@ -421,29 +451,16 @@ def radius_join_pairs_per_row(
     (``top_n_per_origin(..., n="origin_max_results")``; a NULL per-row cap
     likewise drops that origin's rows — NULL comparison semantics).
     """
-    if unit_col is None:
-        to_km(1.0, unit)  # validate the unit eagerly (NULL radii otherwise)
-        unit_of = lambda: F.lit(unit)  # noqa: E731
-    else:
-        unit_of = lambda: F.col(origin_prefix + unit_col)  # noqa: E731
+    r_km, unit_expr = _per_row_radius(radius_col, unit, unit_col, origin_prefix)
     if half_bits is not None:
         hb = half_bits  # resolution given: skip the max-radius scan entirely
     else:
         if max_radius is None:
             # bounded: a scalar max over one numeric column (extra pass; at
             # 100 TB supply the application-known bound instead)
-            if unit_col is None:
-                max_radius = origins.agg(F.max(radius_col)).first()[0]
-                max_km = to_km(float(max_radius), unit) if max_radius else 1.0
-            else:
-                max_km = origins.agg(
-                    F.max(
-                        exprs.radius_as_km(
-                            F.col(radius_col).cast("double"),
-                            F.col(unit_col),
-                        )
-                    )
-                ).first()[0] or 1.0
+            max_km = origins.agg(
+                F.max(_per_row_radius(radius_col, unit, unit_col, "")[0])
+            ).first()[0] or 1.0
         else:
             # with unit_col the bound is unit-ambiguous per row: take it in km
             max_km = (
@@ -452,13 +469,7 @@ def radius_join_pairs_per_row(
             )
         hb = pick_half_bits(max_km)
     return _radius_join_core(
-        origins, neighbors,
-        lambda: (
-            exprs.radius_as_km(
-                F.col(origin_prefix + radius_col).cast("double"),
-                F.lit(unit) if unit_col is None
-                else F.col(origin_prefix + unit_col),
-            )
-        ),
-        hb, unit_of, strategy, origin_prefix, neighbor_prefix, validate,
+        origins, _keyed_build_side(neighbors, hb, neighbor_prefix, validate),
+        r_km, hb, unit_expr, strategy, origin_prefix, neighbor_prefix,
+        validate,
     )

@@ -348,8 +348,11 @@ def streaming_radius_pairs(
     cell explode is stateless Column math, and the cell equi-join is a
     supported stream-static inner join — no state, no watermark; each
     micro-batch joins against the static side independently (append-mode
-    capable). Pair the static side with index.write_bucketed_neighbor_index
-    (cell-bucketed table) to elide its per-batch shuffle at scale."""
+    capable). To elide the static side's per-batch shuffle at scale, write
+    it once with index.write_bucketed_neighbor_index and probe that table
+    with ``index.radius_join_pairs_bucketed(spark, stream, table, radius)``
+    instead: the table's columns are already prefixed and keyed, so it is
+    not a valid ``static_neighbors`` here."""
     from .join import radius_join_pairs
 
     return radius_join_pairs(stream_origins, static_neighbors, radius,

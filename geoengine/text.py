@@ -635,23 +635,17 @@ def _minhash_band_candidates(
     text_col: str,
     num_hashes: int,
     bands: int,
-    shingle_k: int,
-    items: str = "shingles",
 ) -> DataFrame:
     """(doc1 < doc2) candidate pairs = any band-bucket collision (no
     estimated-Jaccard filter — recall belongs to band tuning, precision to
-    the exact verify stage downstream). ``items='words'`` signs the distinct
-    word set (the same item space the exact word-Jaccard verify measures);
-    ``'shingles'`` signs char k-shingles."""
+    the exact verify stage downstream). Signs the distinct word set (the
+    same item space the exact word-Jaccard verify measures)."""
     from .join import spread_small_input
 
     rows = num_hashes // bands
-    if items == "words":
-        sig_col = make_minhash_from_hashes_udf(num_hashes)(
-            word_hashes_expr(text_col)
-        )
-    else:
-        sig_col = make_minhash_udf(num_hashes, shingle_k)(F.col(text_col))
+    sig_col = make_minhash_from_hashes_udf(num_hashes)(
+        word_hashes_expr(text_col)
+    )
     # spread BEFORE the signature kernel (single-row-group files otherwise
     # run it single-task — and that one task would also own the whole
     # band-collision join fanout); cache so the self-join's two branches
@@ -686,18 +680,13 @@ def _simhash_block_candidates(
     id_col: str,
     text_col: str,
     block_bits: int,
-    shingle_k: int = 5,
-    items: str = "shingles",
 ) -> DataFrame:
-    """(doc1 < doc2) candidate pairs sharing >=1 exact simhash block
-    (pigeonhole: guarantees recall of every pair with hamming <
-    64/block_bits)."""
+    """(doc1 < doc2) candidate pairs sharing >=1 exact simhash block of
+    the word-set simhash (pigeonhole: guarantees recall of every pair with
+    hamming < 64/block_bits)."""
     from .join import spread_small_input
 
-    if items == "words":
-        sim_col = make_simhash_from_hashes_udf()(word_hashes_expr(text_col))
-    else:
-        sim_col = make_simhash_udf(shingle_k)(F.col(text_col))
+    sim_col = make_simhash_from_hashes_udf()(word_hashes_expr(text_col))
     # same spread+cache rationale as _minhash_band_candidates
     d = cache(spread_small_input(
         docs.select(F.col(id_col).alias("doc"), F.col(text_col)),
@@ -729,9 +718,7 @@ def lsh_verified_jaccard_pairs(
     prefilter: str = "minhash",
     num_hashes: int = 64,
     bands: int = 32,
-    shingle_k: int = 5,
     block_bits: int = 8,
-    items: str = "words",
 ) -> DataFrame:
     """Scale-safe exact near-dup pairs: LSH candidate generation (MinHash
     banding or SimHash blocks) -> exact word-set Jaccard verify on the
@@ -753,12 +740,10 @@ def lsh_verified_jaccard_pairs(
     precision to the exact verify.
     """
     if prefilter == "minhash":
-        cand = _minhash_band_candidates(
-            docs, id_col, text_col, num_hashes, bands, shingle_k, items
-        )
+        cand = _minhash_band_candidates(docs, id_col, text_col, num_hashes,
+                                        bands)
     elif prefilter == "simhash":
-        cand = _simhash_block_candidates(docs, id_col, text_col, block_bits,
-                                         shingle_k, items)
+        cand = _simhash_block_candidates(docs, id_col, text_col, block_bits)
     else:
         raise ValueError(f"unknown prefilter {prefilter!r}")
 

@@ -2,6 +2,7 @@
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from geoengine.index import (
@@ -28,14 +29,16 @@ def _skewed_points(seed, n_hot, n_bg):
     )
 
 
-def test_salted_join_same_results(spark):
+@pytest.mark.parametrize("half_bits", [8, None])
+def test_salted_join_same_results(spark, half_bits):
+    """None sizes the salted grid from the radius, like radius_join_pairs."""
     o = spark.createDataFrame(_skewed_points(21, 200, 300))
     nb = spark.createDataFrame(_skewed_points(22, 2000, 500))
     plain = radius_join_pairs(o, nb, 25.0, "km", half_bits=8).select(
         "origin_id", "neighbor_id"
     )
     salted = radius_join_pairs_salted(
-        o, nb, 25.0, "km", half_bits=8, hot_threshold=50, max_salt=16
+        o, nb, 25.0, "km", half_bits=half_bits, hot_threshold=50, max_salt=16
     ).select("origin_id", "neighbor_id")
     a = set(map(tuple, plain.toPandas().itertuples(index=False)))
     b = set(map(tuple, salted.toPandas().itertuples(index=False)))

@@ -1,5 +1,6 @@
-"""Where the engine may touch process env, persist blocks or reach into
-the JVM query plan: each in at most one module, checked on the source."""
+"""Where the engine may touch process env, persist blocks, reach into
+the JVM query plan or report a radius join's distance: each in at most
+one module, checked on the source."""
 
 import pathlib
 
@@ -14,6 +15,8 @@ OWNERS = {
     ".persist(": "storage.py",
     ".localCheckpoint(": "storage.py",
     "_jdf.queryExecution": "gates.py",  # the plan-stats seam
+    # the radius joins' refine-and-report tail lives in one core
+    "exprs.km_as_unit(": "join.py",
 }
 
 

@@ -89,6 +89,45 @@ def test_streaming_radius_equals_batch(spark, sf_dir):
     assert g == w and len(w) > 0
 
 
+def test_streaming_radius_bucketed_equals_batch(spark, sf_dir):
+    """A live origin feed probes a bucketed neighbor index table through
+    radius_join_pairs_bucketed (the table is not a valid static side of
+    streaming_radius_pairs: its columns are already prefixed)."""
+    from geoengine.datasets import customer_points, supplier_points
+    from geoengine.index import (
+        radius_join_pairs_bucketed,
+        write_bucketed_neighbor_index,
+    )
+    from geoengine.join import pick_half_bits, radius_join_pairs
+    from geoengine.streaming import replay_parquet_stream, run_stream_to_memory
+
+    origins = customer_points(spark, sf_dir)
+    neighbors = supplier_points(spark, sf_dir)
+    table = "t_stream_bucketed_nb"
+    write_bucketed_neighbor_index(neighbors, table, pick_half_bits(500.0),
+                                  n_buckets=8)
+    try:
+        stream, d = replay_parquet_stream(spark, origins, n_files=3)
+        got = run_stream_to_memory(
+            radius_join_pairs_bucketed(spark, stream, table, 500.0).select(
+                "origin_id", "neighbor_id", F.round("distance_km", 6).alias("d")
+            ),
+            "t_stream_radius_bucketed",
+            "append",
+            d,
+        ).toPandas()
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+    want = (
+        radius_join_pairs(origins, neighbors, 500.0, "km")
+        .select("origin_id", "neighbor_id", F.round("distance_km", 6).alias("d"))
+        .toPandas()
+    )
+    g = set(map(tuple, got.itertuples(index=False)))
+    w = set(map(tuple, want.itertuples(index=False)))
+    assert g == w and len(w) > 0
+
+
 def test_streaming_radius_per_row_equals_batch(spark, sf_dir):
     """Full SearchInquery model on a live feed: streamed origins carry
     per-row radii; availableNow replay == the batch per-row join."""
