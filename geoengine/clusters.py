@@ -1,12 +1,12 @@
 """Near-dup cluster resolution: pairs -> connected components -> keeper.
 
-Every near-dup surface in the engine (minhash/simhash/ngram text pairs,
-embedding-cosine pairs, image-phash pairs) emits *pairs* (doc1, doc2, score).
-A real training-data dedup run needs the next step: transitive closure of
-the pair graph into clusters and ONE deterministic canonical keeper per
-cluster — "which rows do I delete?". This module is that step, engine
-extension (the reference repo has no counterpart; its pipeline stops at
-per-origin neighbor lists).
+Every near-dup surface in the engine (minhash/simhash/LSH-verified Jaccard
+text pairs, embedding-cosine pairs, image-phash pairs) emits *pairs*
+(doc1, doc2, score). A real training-data dedup run needs the next step:
+transitive closure of the pair graph into clusters and ONE deterministic
+canonical keeper per cluster — "which rows do I delete?". This module is
+that step, engine extension (the reference repo has no counterpart; its
+pipeline stops at per-origin neighbor lists).
 
 Algorithm: alternating large-star / small-star min-label propagation
 (Kiveris, Lattanzi, Mirrokni, Rastogi, Vassilvitskii — "Connected

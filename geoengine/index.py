@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import exprs
+from . import exprs, gates
 from .geodesy import to_km
 from .join import (
     _keyed_build_side,
@@ -164,7 +164,6 @@ def write_bucketed_neighbor_index(
     table: str,
     half_bits: int,
     n_buckets: int = 64,
-    neighbor_prefix: str = "neighbor_",
 ) -> str:
     """Persist the neighbor side as a CATALOG TABLE bucketed + sorted by the
     grid cell key. A radius join probing this table needs NO build-side
@@ -176,7 +175,7 @@ def write_bucketed_neighbor_index(
     Columns are stored pre-prefixed (neighbor_id, neighbor_latitude,
     neighbor_longitude, gkey) so the query side joins directly.
     """
-    keyed = _keyed_build_side(neighbors, half_bits, neighbor_prefix)
+    keyed = _keyed_build_side(neighbors, half_bits, "neighbor_")
     (
         keyed.write.mode("overwrite")
         .format("parquet")
@@ -322,7 +321,8 @@ def _ring_frame(
     per-center (sum, weight-count), and join back to the occupied cells
     — ``join_type='left'`` keeps islands (NULL count marks a cell whose
     whole self-excluded ring is unoccupied). The per-``keys``-group
-    1-row stats frame (_n_cells/_total/_sumsq) rides in by broadcast.
+    1-row stats frame (_n_cells/_total/_sumsq) rides in by broadcast,
+    unless the session disabled broadcasts (gates.broadcast_budget 0).
 
     Output: (*keys, ix, iy, n_points, <sum_alias>, <cnt_alias>,
     _n_cells, _total, _sumsq).
@@ -367,9 +367,9 @@ def _ring_frame(
     out = cells.join(rn, cond, join_type).drop(
         "cix", "ciy", *[f"_c_{k}" for k in grp]
     )
-    if grp:
-        return out.join(F.broadcast(stats), grp)
-    return out.crossJoin(F.broadcast(stats))
+    if gates.broadcast_budget(cells) > 0:
+        stats = F.broadcast(stats)
+    return out.join(stats, grp) if grp else out.crossJoin(stats)
 
 
 def _gi_star_frame(
@@ -585,8 +585,8 @@ def ripleys_k(
     100-TB posture: ONE certified radius self-join at max(radii) (the
     cell-keyed equi-join — never all-pairs), one scalar aggregate
     folding every radius bucket map-side, one broadcast of the 1-row
-    count frame. Pair count scales with density * area, not n^2,
-    provided max(radii) stays local.
+    count frame (none when the session disabled broadcasts). Pair count
+    scales with density * area, not n^2, provided max(radii) stays local.
     """
     if not radii:
         raise ValueError("radii must be a non-empty list")
@@ -613,7 +613,9 @@ def ripleys_k(
         ]
     )
     stats = pts.agg(F.count(F.lit(1)).alias("_n"))
-    row = counts.crossJoin(F.broadcast(stats))
+    if gates.broadcast_budget(pts) > 0:
+        stats = F.broadcast(stats)
+    row = counts.crossJoin(stats)
     per_radius = row.select(
         F.explode(
             F.array(

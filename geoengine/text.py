@@ -1,12 +1,15 @@
 """Training-data text operators: dedup (exact / MinHash-LSH / SimHash /
-n-gram Jaccard), language-ID heuristic, quality scoring, token counting,
-document fingerprinting.
+LSH-verified word Jaccard), language-ID heuristic, quality scoring, token
+counting, document fingerprinting.
 
 Design: everything shuffle-bearing is expressed as DataFrame ops on compact
 integer/hash keys; Python appears only in vectorized pandas UDFs computing
-per-document signatures (Arrow-batched numpy). At 100 TB the LSH band join
-is the scale path: candidate pairs come from an equi-join on (band, bucket)
-— never a cross join.
+per-document signatures (Arrow-batched numpy). Every near-dup operator is
+one pipeline: :func:`_signed` computes and caches a (doc, sig) slice,
+:func:`_collisions` self-joins it on exploded (slot, key) collisions —
+MinHash band buckets or SimHash/pHash blocks — and the operator filters
+the candidate pairs. At 100 TB that equi-join is the scale path: never a
+cross join.
 """
 
 from __future__ import annotations
@@ -22,6 +25,8 @@ from pyspark.sql.functions import pandas_udf
 from .storage import cache
 
 MERSENNE = (1 << 61) - 1
+SHINGLE_K = 5  # char shingle width of every text-signed signature
+MINHASH_SEED = 7  # seed of the MinHash (a, b) coefficients
 
 
 _SHINGLE_BASE = np.uint64(1099511628211)
@@ -61,17 +66,17 @@ def _minhash_sigs_from_flat(
 
 
 @lru_cache(maxsize=None)
-def _minhash_coeffs(num_hashes: int, seed: int):
-    rng = np.random.default_rng(seed)
+def _minhash_coeffs(num_hashes: int):
+    rng = np.random.default_rng(MINHASH_SEED)
     a = rng.integers(1, MERSENNE - 1, num_hashes, dtype=np.int64).astype(np.uint64)
     b = rng.integers(0, MERSENNE - 1, num_hashes, dtype=np.int64).astype(np.uint64)
     return a, b
 
 
 @lru_cache(maxsize=None)
-def make_minhash_udf(num_hashes: int = 64, shingle_k: int = 5, seed: int = 7):
+def make_minhash_udf(num_hashes: int = 64):
     """pandas_udf text -> array<long> MinHash signature over char shingles."""
-    a, b = _minhash_coeffs(num_hashes, seed)
+    a, b = _minhash_coeffs(num_hashes)
 
     @pandas_udf("array<long>")
     def _sig(text: pd.Series) -> pd.Series:
@@ -79,7 +84,7 @@ def make_minhash_udf(num_hashes: int = 64, shingle_k: int = 5, seed: int = 7):
         # shingle set, apply all hash functions to the flat array, then
         # segment-min back per document with minimum.reduceat
         shingles = [
-            _shingle_hashes(t or "", shingle_k) & np.uint64((1 << 32) - 1)
+            _shingle_hashes(t or "", SHINGLE_K) & np.uint64((1 << 32) - 1)
             for t in text
         ]
         if not shingles:
@@ -112,10 +117,10 @@ def _flat_from_hash_arrays(items: pd.Series):
 
 
 @lru_cache(maxsize=None)
-def make_minhash_from_hashes_udf(num_hashes: int = 64, seed: int = 7):
+def make_minhash_from_hashes_udf(num_hashes: int = 64):
     """pandas_udf array<long> item hashes -> array<long> MinHash signature
     (no Python string processing: items are hashed JVM-side)."""
-    a, b = _minhash_coeffs(num_hashes, seed)
+    a, b = _minhash_coeffs(num_hashes)
 
     @pandas_udf("array<long>")
     def _sig(items: pd.Series) -> pd.Series:
@@ -147,22 +152,22 @@ def _simhash_from_flat(flat: np.ndarray, lens: np.ndarray) -> np.ndarray:
     return packed.astype(np.int64)
 
 
-def simhash_batch(texts, shingle_k: int = 5) -> np.ndarray:
+def simhash_batch(texts) -> np.ndarray:
     """Vectorized SimHash of a batch of texts -> int64[B]."""
     if len(texts) == 0:
         return np.empty(0, dtype=np.int64)
-    shingles = [_shingle_hashes(t or "", shingle_k) for t in texts]
+    shingles = [_shingle_hashes(t or "", SHINGLE_K) for t in texts]
     lens = np.array([len(s) for s in shingles], dtype=np.int64)
     return _simhash_from_flat(np.concatenate(shingles), lens)
 
 
 @lru_cache(maxsize=None)
-def make_simhash_udf(shingle_k: int = 5):
+def make_simhash_udf():
     """pandas_udf text -> int64 SimHash (sign of per-bit sums)."""
 
     @pandas_udf("long")
     def _sim(text: pd.Series) -> pd.Series:
-        return pd.Series(simhash_batch(list(text), shingle_k))
+        return pd.Series(simhash_batch(list(text)))
 
     return _sim
 
@@ -202,30 +207,31 @@ def fingerprint_expr(text_col) -> "F.Column":
 
 
 def band_bucket_expr(bands: int, rows: int, sig_col: str = "sig"):
-    """Exploded (band, bucket) struct array over a MinHash signature —
-    ANSI-safe xxhash64 fold per band. Single definition shared by every
-    banding caller so the bucket hashing (and hence the recall-certified
-    candidate sets) cannot drift between code paths."""
+    """Exploded (slot=band, key=bucket) struct array over a MinHash
+    signature — ANSI-safe xxhash64 fold per band. Single definition shared
+    by every banding caller so the bucket hashing (and hence the
+    recall-certified candidate sets) cannot drift between code paths."""
     return F.explode(
         F.expr(
             f"transform(sequence(0, {bands - 1}), "
-            f"b -> struct(b AS band, "
+            f"b -> struct(b AS slot, "
             f"aggregate(slice({sig_col}, b * {rows} + 1, {rows}), CAST(b AS BIGINT), "
-            f"(acc, x) -> xxhash64(acc, x)) AS bucket))"
+            f"(acc, x) -> xxhash64(acc, x)) AS key))"
         )
     )
 
 
-def block_split_expr(block_bits: int, hash_col: str = "simhash"):
-    """Exploded (blk, val) struct array splitting a 64-bit hash into
-    64/block_bits exact blocks (pigeonhole candidate generation)."""
+def block_split_expr(block_bits: int, hash_col: str = "sig"):
+    """Exploded (slot=block index, key=block value) struct array splitting
+    a 64-bit hash into 64/block_bits exact blocks (pigeonhole candidate
+    generation)."""
     nblocks = 64 // block_bits
     mask = (1 << block_bits) - 1
     return F.explode(
         F.expr(
             f"transform(sequence(0, {nblocks - 1}), "
-            f"b -> struct(b AS blk, "
-            f"shiftright({hash_col}, b * {block_bits}) & {mask} AS val))"
+            f"b -> struct(b AS slot, "
+            f"shiftright({hash_col}, b * {block_bits}) & {mask} AS key))"
         )
     )
 
@@ -421,6 +427,48 @@ def pack_sequences(
     ).withColumn("n_tokens", n_tokens)
 
 
+def _signed(docs: DataFrame, id_col: str, col: str, sig: Column) -> DataFrame:
+    """The (doc, sig) slice every near-dup operator self-joins: ``sig`` is
+    a Column over ``docs[col]`` (a signature UDF, or the column itself for
+    a stored hash). A narrow scan is spread first — the signature kernel
+    (and the collision join's fanout) otherwise runs single-task on a
+    one-row-group file (guide §2.2) — and the slice is CACHED, so the two
+    join branches compute the signature stage once (a broadcast build side
+    is not exchange-reused). An enclosing :func:`storage.scope` releases
+    the two-column block once the pairs are materialized."""
+    from .join import spread_small_input
+
+    return cache(
+        spread_small_input(
+            docs.select(F.col(id_col).alias("doc"), F.col(col)), F.col("doc")
+        ).select("doc", sig.alias("sig"))
+    )
+
+
+def _collisions(signed: DataFrame, keys: Column, *carry: str) -> DataFrame:
+    """Candidate pairs of a signed slice: explode each doc's ``keys`` — a
+    generator of struct(slot, key), see :func:`band_bucket_expr` and
+    :func:`block_split_expr` — and equi-join the slice with itself on
+    (slot, key) with ``doc < doc``. Output (doc1, doc2, <c>1, <c>2 for
+    each carried column c); a pair colliding in several slots appears
+    once per slot, so callers filter and then dedup."""
+    slotted = signed.select("doc", *carry, keys.alias("_k")).select(
+        "doc", *carry, "_k.slot", "_k.key"
+    )
+    l, r = slotted.alias("l"), slotted.alias("r")
+    return l.join(
+        r,
+        (F.col("l.slot") == F.col("r.slot"))
+        & (F.col("l.key") == F.col("r.key"))
+        & (F.col("l.doc") < F.col("r.doc")),
+    ).select(
+        F.col("l.doc").alias("doc1"),
+        F.col("r.doc").alias("doc2"),
+        *[F.col(f"{side}.{c}").alias(f"{c}{i}")
+          for c in carry for i, side in ((1, "l"), (2, "r"))],
+    )
+
+
 def minhash_near_dup_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -428,34 +476,12 @@ def minhash_near_dup_pairs(
     num_hashes: int = 64,
     bands: int = 16,
     jaccard_threshold: float = 0.5,
-    shingle_k: int = 5,
 ) -> DataFrame:
     """MinHash + LSH banding: signature -> band buckets -> equi-join on
     (band, bucket) -> estimated-Jaccard filter. No cross join anywhere;
     the band join shuffles on a 64-bit bucket hash (scale path)."""
-    from .join import spread_small_input
-
-    rows = num_hashes // bands
-    sig = make_minhash_udf(num_hashes, shingle_k)
-    with_sig = cache(  # self-joined below: compute the signature UDF once
-        # spread a narrow scan first: the shingling/MinHash Arrow kernel
-        # otherwise runs single-task on a one-row-group file (guide §2.2)
-        spread_small_input(
-            docs.select(F.col(id_col).alias("doc"), F.col(text_col)),
-            F.col("doc"),
-        )
-        .withColumn("sig", sig(F.col(text_col)))
-        .drop(text_col)
-    )
-
-    banded = with_sig.select(
-        "doc",
-        "sig",
-        band_bucket_expr(bands, rows).alias("bb"),
-    ).select("doc", "sig", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-
-    left = banded.alias("l")
-    right = banded.alias("r")
+    sig = make_minhash_udf(num_hashes)(F.col(text_col))
+    signed = _signed(docs, id_col, text_col, sig)
     est = F.expr(
         "aggregate(zip_with(sig1, sig2, (x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END), "
         "0, (acc, v) -> acc + v)"
@@ -466,21 +492,28 @@ def minhash_near_dup_pairs(
     # surviving pairs and to 3 narrow columns instead of two 64-long
     # signatures per row (guide §2.3)
     return (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.doc") < F.col("r.doc")),
-        )
-        .select(
-            F.col("l.doc").alias("doc1"),
-            F.col("r.doc").alias("doc2"),
-            F.col("l.sig").alias("sig1"),
-            F.col("r.sig").alias("sig2"),
-        )
+        _collisions(signed, band_bucket_expr(bands, num_hashes // bands), "sig")
         .withColumn("est_jaccard", est)
         .where(F.col("est_jaccard") >= jaccard_threshold)
         .select("doc1", "doc2", "est_jaccard")
+        .dropDuplicates(["doc1", "doc2"])
+    )
+
+
+def _hamming_pairs(signed: DataFrame, max_hamming: int,
+                   block_bits: int) -> DataFrame:
+    """Block-pigeonhole near-dups of a signed 64-bit hash slice: block
+    collisions -> exact popcount filter -> one row per pair. The filter
+    runs BEFORE the dedup exchange (duplicates of a pair carry identical
+    hashes, so it commutes with the dedup): the shuffle then moves only
+    the surviving (doc1, doc2, hamming) rows — guide §2.3."""
+    return (
+        _collisions(signed, block_split_expr(block_bits), "sig")
+        .select(
+            "doc1", "doc2",
+            F.bit_count(F.col("sig1").bitwiseXOR(F.col("sig2"))).alias("hamming"),
+        )
+        .where(F.col("hamming") <= max_hamming)
         .dropDuplicates(["doc1", "doc2"])
     )
 
@@ -500,47 +533,12 @@ def hash_near_dup_pairs(
     per (block index, block value), exact popcount filter. Never an
     all-pairs plan: candidates come from the block equi-join.
 
-    Output: (id1, id2, hamming), id1 < id2, each pair once.
-
-    The (id, hash) projection is CACHED before the self-join: the two join
-    branches would otherwise each re-execute the (possibly expensive)
-    signature stage — a pandas-UDF simhash or a decode+DCT phash — since a
-    broadcast build side is not exchange-reused. Same protection (and
-    cache-block trade) as minhash_near_dup_pairs' signature cache; the
-    cached slice is two compact columns, released by an enclosing
-    :func:`storage.scope` once the pairs are materialized."""
-    from .join import spread_small_input
-
-    d = cache(spread_small_input(
-        df.select(F.col(id_col).alias("doc"), F.col(hash_col).alias("_h64")),
-        F.col("doc"),
-    ))
-    blocked = d.select(
-        "doc",
-        "_h64",
-        block_split_expr(block_bits, "_h64").alias("bb"),
-    ).select("doc", "_h64", "bb.blk", "bb.val")
-    l, r = blocked.alias("l"), blocked.alias("r")
-    # popcount + threshold BEFORE the dedup exchange (duplicates of a pair
-    # carry identical hashes, so the hamming filter commutes with the
-    # dedup): the shuffle then moves only the surviving (doc1, doc2,
-    # hamming) rows — guide §2.3
-    return (
-        l.join(
-            r,
-            (F.col("l.blk") == F.col("r.blk"))
-            & (F.col("l.val") == F.col("r.val"))
-            & (F.col("l.doc") < F.col("r.doc")),
-        )
-        .select(
-            F.col("l.doc").alias("doc1"),
-            F.col("r.doc").alias("doc2"),
-            F.bit_count(
-                F.col("l._h64").bitwiseXOR(F.col("r._h64"))
-            ).alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["doc1", "doc2"])
+    Output: (doc1, doc2, hamming), doc1 < doc2, each pair once. The
+    (id, hash) slice is cached before the self-join (see
+    :func:`_signed`): a pandas-UDF simhash or a decode+DCT phash upstream
+    runs once, not once per join branch."""
+    return _hamming_pairs(
+        _signed(df, id_col, hash_col, F.col(hash_col)), max_hamming, block_bits
     )
 
 
@@ -555,157 +553,9 @@ def simhash_near_dup_pairs(
     4 x 16-bit blocks; pairs within hamming<=k must share >=1 exact block
     (pigeonhole for k<=3 with 4 blocks; wider k accepted as recall-bounded)
     -> equi-join per block, exact popcount filter."""
-    from .join import spread_small_input
-
-    sim = make_simhash_udf()
-    d = spread_small_input(
-        docs.select(F.col(id_col), F.col(text_col)), F.col(id_col)
-    ).withColumn("simhash", sim(F.col(text_col))).drop(text_col)
-    return hash_near_dup_pairs(
-        d, "simhash", id_col=id_col,
-        max_hamming=max_hamming, block_bits=block_bits,
-    )
-
-
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    group_col: str = "source",
-    threshold: float = 0.3,
-    max_group_rows: int | None = None,
-) -> DataFrame:
-    """Exact word-set Jaccard within candidate groups (blocked self-join) —
-    the exact-verification stage after an LSH prefilter.
-
-    SCALE WARNING: this is QUADRATIC within each ``group_col`` group (the
-    self-join emits |g|^2/2 candidate rows per group). That is the point
-    when the groups are LSH buckets or otherwise pre-blocked candidates —
-    but calling it directly on a raw corpus column with a hot group (one
-    crawler domain with 10^7 docs) materializes ~10^14 pairs. At corpus
-    scale use :func:`lsh_verified_jaccard_pairs`, which generates
-    candidates by MinHash banding / SimHash blocks first and runs this
-    exact test only on collisions. ``max_group_rows`` makes the footgun
-    loud: when set, one cheap groupBy-count pass raises if any group
-    exceeds it (pay a small extra scan to refuse a runaway join)."""
-    if max_group_rows is not None:
-        hot = (
-            docs.groupBy(F.col(group_col))
-            .agg(F.count("*").alias("_n"))
-            .where(F.col("_n") > max_group_rows)
-            .orderBy(F.col("_n").desc())
-            .limit(3)
-            .collect()
-        )
-        if hot:
-            worst = ", ".join(f"{r[0]!r}:{r['_n']}" for r in hot)
-            raise ValueError(
-                f"ngram_jaccard_pairs: group(s) over max_group_rows="
-                f"{max_group_rows} would go quadratic ({worst}); use "
-                "lsh_verified_jaccard_pairs for un-blocked corpora"
-            )
-    d = docs.select(
-        F.col(id_col).alias("doc"),
-        F.col(group_col).alias("grp"),
-        F.array_distinct(F.split(F.col(text_col), " ")).alias("words"),
-    )
-    l, r = d.alias("l"), d.alias("r")
-    inter = F.size(F.array_intersect(F.col("l.words"), F.col("r.words")))
-    uni = (
-        F.size(F.col("l.words")) + F.size(F.col("r.words")) - inter
-    )
-    return (
-        l.join(
-            r,
-            (F.col("l.grp") == F.col("r.grp")) & (F.col("l.doc") < F.col("r.doc")),
-        )
-        .withColumn("jaccard", inter.cast("double") / uni.cast("double"))
-        .where(F.col("jaccard") >= threshold)
-        .select(
-            F.col("l.doc").alias("doc1"),
-            F.col("r.doc").alias("doc2"),
-            F.round("jaccard", 6).alias("jaccard"),
-        )
-    )
-
-
-def _minhash_band_candidates(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int,
-    bands: int,
-) -> DataFrame:
-    """(doc1 < doc2) candidate pairs = any band-bucket collision (no
-    estimated-Jaccard filter — recall belongs to band tuning, precision to
-    the exact verify stage downstream). Signs the distinct word set (the
-    same item space the exact word-Jaccard verify measures)."""
-    from .join import spread_small_input
-
-    rows = num_hashes // bands
-    sig_col = make_minhash_from_hashes_udf(num_hashes)(
-        word_hashes_expr(text_col)
-    )
-    # spread BEFORE the signature kernel (single-row-group files otherwise
-    # run it single-task — and that one task would also own the whole
-    # band-collision join fanout); cache so the self-join's two branches
-    # compute the signature stage once, mirroring minhash_near_dup_pairs
-    with_sig = cache(
-        spread_small_input(
-            docs.select(F.col(id_col).alias("doc"), F.col(text_col)),
-            F.col("doc"),
-        )
-        .withColumn("sig", sig_col)
-        .drop(text_col)
-    )
-    banded = with_sig.select(
-        "doc",
-        band_bucket_expr(bands, rows).alias("bb"),
-    ).select("doc", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    l, r = banded.alias("l"), banded.alias("r")
-    return (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.doc") < F.col("r.doc")),
-        )
-        .select(F.col("l.doc").alias("doc1"), F.col("r.doc").alias("doc2"))
-        .dropDuplicates(["doc1", "doc2"])
-    )
-
-
-def _simhash_block_candidates(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    block_bits: int,
-) -> DataFrame:
-    """(doc1 < doc2) candidate pairs sharing >=1 exact simhash block of
-    the word-set simhash (pigeonhole: guarantees recall of every pair with
-    hamming < 64/block_bits)."""
-    from .join import spread_small_input
-
-    sim_col = make_simhash_from_hashes_udf()(word_hashes_expr(text_col))
-    # same spread+cache rationale as _minhash_band_candidates
-    d = cache(spread_small_input(
-        docs.select(F.col(id_col).alias("doc"), F.col(text_col)),
-        F.col("doc"),
-    ).withColumn("simhash", sim_col).drop(text_col))
-    blocked = d.select(
-        "doc",
-        block_split_expr(block_bits).alias("bb"),
-    ).select("doc", "bb.blk", "bb.val")
-    l, r = blocked.alias("l"), blocked.alias("r")
-    return (
-        l.join(
-            r,
-            (F.col("l.blk") == F.col("r.blk"))
-            & (F.col("l.val") == F.col("r.val"))
-            & (F.col("l.doc") < F.col("r.doc")),
-        )
-        .select(F.col("l.doc").alias("doc1"), F.col("r.doc").alias("doc2"))
-        .dropDuplicates(["doc1", "doc2"])
+    sig = make_simhash_udf()(F.col(text_col))
+    return _hamming_pairs(
+        _signed(docs, id_col, text_col, sig), max_hamming, block_bits
     )
 
 
@@ -739,13 +589,21 @@ def lsh_verified_jaccard_pairs(
     oracle-exact, but a far tighter prefilter). Recall belongs to banding,
     precision to the exact verify.
     """
+    # both prefilters sign the distinct word set: the same item space the
+    # exact word-Jaccard verify below measures. No estimate filter on the
+    # collisions — recall belongs to band/block tuning, precision to the
+    # exact verify.
+    items = word_hashes_expr(text_col)
     if prefilter == "minhash":
-        cand = _minhash_band_candidates(docs, id_col, text_col, num_hashes,
-                                        bands)
+        sig = make_minhash_from_hashes_udf(num_hashes)(items)
+        keys = band_bucket_expr(bands, num_hashes // bands)
     elif prefilter == "simhash":
-        cand = _simhash_block_candidates(docs, id_col, text_col, block_bits)
+        sig = make_simhash_from_hashes_udf()(items)
+        keys = block_split_expr(block_bits)
     else:
         raise ValueError(f"unknown prefilter {prefilter!r}")
+    cand = _collisions(_signed(docs, id_col, text_col, sig), keys) \
+        .dropDuplicates(["doc1", "doc2"])
 
     cols = [F.col(id_col).alias("doc"),
             F.array_distinct(F.split(F.col(text_col), " ")).alias("words")]

@@ -106,6 +106,24 @@ def _pip(spark, tmp):
     return points_in_polygons(pts, polys)
 
 
+def _emerging(spark, tmp):
+    from geoengine.index import emerging_hotspots
+
+    # two time slices over one ~40-degree patch, the second denser in its
+    # north-east: many occupied cells with defined gi_z in both slices.
+    # Two slices keep each cell's mean_gi a sum of two terms, which no
+    # plan can reorder.
+    rng = random.Random(13)
+    rows = [(rng.uniform(-20, 20), rng.uniform(-20, 20), 0)
+            for _ in range(150)]
+    rows += [(rng.uniform(-20, 20), rng.uniform(-20, 20), 1)
+             for _ in range(100)]
+    rows += [(rng.uniform(5, 20), rng.uniform(5, 20), 1) for _ in range(80)]
+    df = spark.createDataFrame(rows,
+                               "latitude double, longitude double, bin long")
+    return emerging_hotspots(df, 5)
+
+
 def _cc_types(id_type):
     def check(spark, rows, schema):
         want = "long" if id_type == "long" else "integer"
@@ -138,6 +156,12 @@ CASES = {
         _dbscan, _broadcast_branches({"DBSCAN_CORE_BROADCAST_ROWS": 0}), None),
     "pip_geometry_broadcast": (
         _pip, _broadcast_branches({"BROADCAST_HARD_CAP": 0}), None),
+    # the per-bin Gi* stats frame: a forced broadcast only while the
+    # session allows broadcasts
+    "emerging_hotspots": (_emerging, [
+        Branch("on", broadcast=True),
+        Branch("disabled_conf", conf="-1", broadcast=False),
+    ], None),
 }
 
 

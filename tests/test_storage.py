@@ -218,21 +218,37 @@ def test_scope_nests_releases_on_error_and_release_is_idempotent(spark):
     bare.unpersist()
 
 
-def test_unscoped_cache_follows_the_current_conf(spark):
+# every other case's default-conf plan holds a broadcast join
+NO_BROADCAST_AT_DEFAULT = {"cc_local", "cc_star_loop"}
+
+
+@pytest.mark.parametrize("case", list(CASES))
+def test_unscoped_cache_follows_the_current_conf(spark, case, monkeypatch):
     """A block cached outside any scope was planned under the conf of the
     call that cached it; a later call with an equal plan must not reuse
-    it. dbscan's eps-pair cache is planned with a broadcast join under
-    the default conf and must hold none once broadcasts are disabled."""
-    from geoengine.clusters import spatial_dbscan
-
+    it. Each caching operator runs unscoped twice on the same input
+    frames, under the default conf and then with broadcasts disabled:
+    the second run's plan must hold no broadcast, whatever the first
+    one planned, and both must return the same rows."""
+    build, check, _ = CASES[case]
     key = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(key)
     spark.catalog.clearCache()
 
-    df = _diagonal(spark)  # one frame: both calls plan the same pair set
+    # one frame per input, as in a long-lived session re-querying a
+    # table: both runs then plan equal blocks
+    frames, create = {}, spark.createDataFrame
+
+    def same_frame(*args, **kwargs):
+        arg = repr((args, kwargs))
+        if arg not in frames:
+            frames[arg] = create(*args, **kwargs)
+        return frames[arg]
+
+    monkeypatch.setattr(spark, "createDataFrame", same_frame)
 
     def run():
-        out = spatial_dbscan(df, 5.0, 3)  # no scope
+        out = build(spark, monkeypatch)  # no scope
         rows = out.collect()
         return rows, out._jdf.queryExecution().executedPlan().toString()
 
@@ -243,8 +259,10 @@ def test_unscoped_cache_follows_the_current_conf(spark):
     finally:
         spark.conf.set(key, old)
         spark.catalog.clearCache()
-    assert "BroadcastHashJoin" in default_plan
+    assert ("BroadcastHashJoin" in default_plan) == (
+        case not in NO_BROADCAST_AT_DEFAULT)
     assert "BroadcastHashJoin" not in plan
     assert "BroadcastExchange" not in plan
-    _dbscan_check(spark, rows)
-    assert sorted(map(tuple, rows)) == sorted(map(tuple, default_rows))
+    check(spark, rows)
+    assert sorted(map(tuple, rows), key=repr) == sorted(
+        map(tuple, default_rows), key=repr)

@@ -115,13 +115,6 @@ def test_text_stats_and_lang(spark):
     assert ((out["space_ratio"] > 0) & (out["space_ratio"] < 1)).all()
 
 
-def test_ngram_jaccard_exact_pairs(spark):
-    docs = _docs_with_dups(spark)
-    pairs = text.ngram_jaccard_pairs(docs, threshold=0.9).toPandas()
-    got = set(zip(pairs["doc1"], pairs["doc2"]))
-    assert (0, 1) in got and (0, 2) in got and (1, 2) in got
-
-
 # ---------------------------------------------------------------------------
 # property-based invariants (hypothesis) — signature kernels, no Spark
 # ---------------------------------------------------------------------------
@@ -333,18 +326,3 @@ def test_hash_split_is_order_and_partitioning_invariant(spark):
         .toPandas().set_index("doc_id")["split"].sort_index()
     )
     assert (a == b).all()
-
-
-def test_ngram_jaccard_max_group_rows_guard(spark):
-    from geoengine.text import ngram_jaccard_pairs
-
-    docs = spark.createDataFrame(
-        [(i, "hot", "a b c") for i in range(30)]
-        + [(100 + i, "cold", "x y z") for i in range(3)],
-        "doc_id long, source string, text string",
-    )
-    with pytest.raises(ValueError, match="quadratic"):
-        ngram_jaccard_pairs(docs, max_group_rows=10)
-    # under the cap: runs normally (and unguarded stays unguarded)
-    assert ngram_jaccard_pairs(docs, max_group_rows=50).count() > 0
-    assert ngram_jaccard_pairs(docs).count() > 0
