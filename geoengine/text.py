@@ -602,8 +602,9 @@ def lsh_verified_jaccard_pairs(
         keys = block_split_expr(block_bits)
     else:
         raise ValueError(f"unknown prefilter {prefilter!r}")
-    cand = _collisions(_signed(docs, id_col, text_col, sig), keys) \
-        .dropDuplicates(["doc1", "doc2"])
+    cand = _collisions(_signed(docs, id_col, text_col, sig), keys).dropDuplicates(
+        ["doc1", "doc2"]
+    )
 
     cols = [F.col(id_col).alias("doc"),
             F.array_distinct(F.split(F.col(text_col), " ")).alias("words")]
